@@ -47,6 +47,13 @@ object GraftSession {
     // downstream stages of an empty intermediate; observability wins.
     .config("spark.sql.adaptive.optimizer.excludedRules",
       "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+    // list a table's directories on the driver, not in a Spark job: past
+    // this many paths (default 32) the listing runs as a parallel job, which
+    // a 64-bucket MergeSink table would start on every merge and read. Every
+    // session built here is local[n], so that job would run on the driver's
+    // own cores anyway and only add job scheduling; the bucket counts this
+    // engine writes are at most 64, well under the bound
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     // events.ts is ns-precision parquet; Spark only reads NANOS as long

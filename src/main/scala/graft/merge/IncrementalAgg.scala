@@ -25,8 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the standard incremental-view contract).
   *
   * Layout is MergeSink's: hash-bucketed `part=pmod(xxhash64(key), n)`
-  * directories, dynamic partition overwrite of only the touched buckets,
-  * bounded driver state (the touched-bucket id list).
+  * directories, only the touched buckets rewritten and swapped in through
+  * [[MergeSink.swapBuckets]], bounded driver state (the touched-bucket id
+  * list).
   */
 final class IncrementalAgg(
     spark: SparkSession,
@@ -93,21 +94,9 @@ final class IncrementalAgg(
       try {
         merged.write.partitionBy(partCol)
           .mode(SaveMode.Overwrite).parquet(stagingPath.toString)
-        if (!tableFs.exists(tablePath)) tableFs.mkdirs(tablePath)
-        val asideRoot = new org.apache.hadoop.fs.Path(
-          stagingPath.toString + "__aside")
-        for (p <- touched) {
-          val src = new org.apache.hadoop.fs.Path(stagingPath, s"$partCol=$p")
-          val dst = new org.apache.hadoop.fs.Path(tablePath, s"$partCol=$p")
-          if (tableFs.exists(src)) {
-            if (tableFs.exists(dst)) {
-              tableFs.mkdirs(asideRoot)
-              tableFs.rename(dst, new org.apache.hadoop.fs.Path(asideRoot, s"$partCol=$p"))
-            }
-            tableFs.rename(src, dst)
-          }
-        }
-        tableFs.delete(asideRoot, true)
+        if (!tableFs.exists(tablePath) && !tableFs.mkdirs(tablePath))
+          throw new java.io.IOException(s"cannot create $tablePath")
+        MergeSink.swapBuckets(tableFs, stagingPath, tablePath, partCol, touched.toSeq)
       } finally tableFs.delete(stagingPath, true)
     } else {
       merged.localCheckpoint(true).write

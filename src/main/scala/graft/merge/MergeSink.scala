@@ -1,8 +1,13 @@
 package graft.merge
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Datastream-parity merge path (SURVEY.md §2 O25/O26): batch backfill ∪
   * streaming CDC tail, applied to the sink as LATEST-CHANGE-WINS per key —
@@ -10,13 +15,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * append-only subscription sink.
   *
   * Layout: the merged table is hash-partitioned into `numBuckets` key
-  * buckets (`part=pmod(xxhash64(key), n)` directory partitions). Each merge
-  * batch rewrites ONLY the buckets its keys touch (dynamic partition
-  * overwrite), reading back just those buckets for the merge — at 100 TB a
-  * micro-batch touching 0.1% of keys rewrites ~0.1% of the table, not all
-  * of it. Within a rewrite, the merge itself is one combinable per-key
-  * `max_by` aggregate picking the same winner as the `row_number`
-  * latest-wins window the batch-twin query q16 verifies against DuckDB.
+  * buckets, one `__part=pmod(xxhash64(key), n)` directory each, and each
+  * bucket directory holds exactly ONE parquet file. A merge reads back only
+  * the buckets its keys touch, writes their replacements to a sibling
+  * staging directory (each bucket by one task, as one file) and renames
+  * each into place — at 100 TB a micro-batch touching 0.1% of keys
+  * rewrites ~0.1% of the table, not all of it. Within a rewrite, the merge
+  * itself is one per-key `max_by` aggregate picking the same winner as the
+  * `row_number` latest-wins window the batch-twin query q16 verifies
+  * against DuckDB.
+  *
+  * Schema: the table's evolved schema lives in [[MergeSink.SchemaFile]] at
+  * the table root (`_`-prefixed, so Spark's file listing skips it), and
+  * `merge`/`read` read the buckets with that schema instead of merging
+  * every parquet footer; a file lacking a column null-fills it. The stored
+  * schema is a SUPERSET of every footer in the table: it is replaced
+  * (staged, then renamed) BEFORE the first bucket carrying a new column
+  * swaps in, so no reader can meet a column the stored schema hides. A
+  * table without the file (written before it existed, or read in the
+  * instant the file is being replaced) falls back to a footer-merged
+  * `mergeSchema` read.
   */
 final class MergeSink(
     spark: SparkSession,
@@ -27,9 +45,39 @@ final class MergeSink(
     tombstoneCol: Option[String] = None) {
 
   private val partCol = "__part"
+  private val tablePath = new Path(tableDir)
 
   private def withPart(df: DataFrame): DataFrame =
     df.withColumn(partCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
+
+  // existence through the Hadoop FileSystem for tableDir's scheme:
+  // java.io.File is local-only and would report HDFS/S3 state absent
+  private def fileSystem: FileSystem =
+    tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def storedSchema(fs: FileSystem): Option[StructType] =
+    MergeSink.readSchema(fs, new Path(tablePath, MergeSink.SchemaFile))
+
+  /** The whole table, bucket column included: with the stored schema when
+    * there is one, else by merging every footer (mergeSchema: generations
+    * written before a column was added lack it — q257's contract). */
+  private def scan(stored: Option[StructType]): DataFrame = stored match {
+    case Some(schema) => spark.read.schema(schema).parquet(tableDir)
+    case None => spark.read.option("mergeSchema", "true").parquet(tableDir)
+  }
+
+  /** Replace the stored schema: staged under `staging`, then renamed in. */
+  private def storeSchema(fs: FileSystem, schema: StructType, staging: Path): Unit = {
+    val staged = new Path(staging, MergeSink.SchemaFile)
+    val out = fs.create(staged, true)
+    try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val live = new Path(tablePath, MergeSink.SchemaFile)
+    fs.delete(live, false)
+    MergeSink.rename(fs, staged, live)
+  }
+
+  private def stagingPath(): Path =
+    new Path(tableDir + s"__staging-${java.lang.System.nanoTime()}")
 
   /** Merge one batch of change rows into the table: latest row per key wins,
     * ordering by `orderCols` (e.g. change timestamp, then a unique change id)
@@ -38,45 +86,41 @@ final class MergeSink(
     * the winner is a pure function of row content — never of batch order or
     * partition layout. Idempotent AND deterministic: re-applying a batch, or
     * applying the same rows in any order, yields the identical table state.
-    * (Two fully identical rows tie harmlessly: either one is the same row.) */
+    * (Two fully identical rows tie harmlessly: either one is the same row.)
+    * A filesystem call that reports failure aborts the merge with an
+    * `IOException`; buckets not yet swapped keep their pre-merge rows. */
   def merge(batch: DataFrame): Unit = {
     val spark = this.spark
-    // A/B dial for the staged-swap write path below (default ON); the off
-    // leg is the r18 localCheckpoint + dynamic-partition-overwrite path
-    val stageSwap = spark.conf
-      .getOption("spark.graft.merge.stageswap").forall(_.toBoolean)
     // the batch has two consumers (the touched-bucket probe and the merge
     // union) — persist so an expensive batch source (a parsed JSON
     // micro-batch, a computed change set) is evaluated once, not twice
-    val newPart0 = withPart(batch)
-    val persistBatch = spark.conf
-      .getOption("spark.graft.merge.persistbatch").forall(_.toBoolean)
-    val newPart = if (persistBatch)
-      newPart0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else newPart0
+    val newPart = withPart(batch)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val touched = newPart.select(partCol).distinct()
         .collect().map(_.getLong(0)) // bounded by numBuckets — driver-safe
       if (touched.isEmpty) return
 
-      // existence through the Hadoop FileSystem for tableDir's scheme:
-      // java.io.File is local-only and would report HDFS/S3 state absent
-      val tablePath = new org.apache.hadoop.fs.Path(tableDir)
-      val fs = tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fileSystem
+      val exists = fs.exists(tablePath)
+      val stored = if (exists) storedSchema(fs) else None
       val existingOpt =
-        if (fs.exists(tablePath))
-          // mergeSchema: earlier generations may lack columns a later batch
-          // introduced (schema evolution on the merge path — q257's gate);
-          // the footer-merged read null-fills them
-          Some(spark.read.option("mergeSchema", "true").parquet(tableDir)
-            .filter(col(partCol).isin(touched.toSeq: _*)))
+        if (exists) Some(scan(stored).filter(col(partCol).isin(touched.toSeq: _*)))
         else None
       // allowMissingColumns both ways: a batch may ADD a column (old rows
       // null-fill) or OMIT one the table already has (new rows null-fill) —
-      // the lakehouse evolution contract, never a hard failure mid-stream
+      // the lakehouse evolution contract, never a hard failure mid-stream.
+      // One task per bucket: hash-partitioned on the bucket column into at
+      // most as many partitions as touched buckets, so the per-key pick
+      // below (grouped by key AND bucket, which this partitioning already
+      // satisfies) runs without another shuffle and writes each touched
+      // bucket as exactly one file.
+      val tasks = math.min(touched.length,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val all = existingOpt
         .map(_.unionByName(newPart, allowMissingColumns = true))
         .getOrElse(newPart)
+        .repartition(tasks, col(partCol))
 
       // column order fixed by name so the hash is layout-independent; map-typed
       // columns are excluded (unhashable — their iteration order is undefined,
@@ -86,86 +130,51 @@ final class MergeSink(
         .map(_.name).sorted.map(c => col(c))
       val contentHash =
         if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
-      // latest-wins as a COMBINABLE aggregate (r20, guide §2.3 "aggregate
-      // before you shuffle"; the r19 verdict asked the batch side to be
-      // pre-reduced before the per-key window — the max_by form gets that
-      // for free as map-side partial aggregation, so a batch carrying many
-      // changes per key ships one partial winner per key per map task
-      // instead of every row into a per-key sort): the winner under
+      // latest-wins as a per-key max_by aggregate (r20): the winner under
       // `row_number() OVER (PARTITION BY key ORDER BY orderCols DESC,
       // hash DESC) = 1` is exactly the row whose (orderCols, hash) tuple
       // is the lexicographic MAX — desc ordering puts NULL last, struct
       // comparison puts NULL first ascending, so the two agree on the
       // winner (identical full-row ties are the same row either way).
+      // Adding the bucket to the grouping changes no group: it is a
+      // function of the key.
       val ordKey = struct(orderCols.map(c => col(c)) :+ contentHash: _*)
-      // A/B dial (default ON, same discipline as stageswap): the off leg
-      // is the r19 row_number window form — MergeSinkSpec pins the two
-      // forms pick the same winner
+      // A/B dial (default ON): the off leg is the r19 row_number window
+      // form — MergeSinkSpec pins the two forms pick the same winner
       val maxBy = spark.conf
         .getOption("spark.graft.merge.maxby").forall(_.toBoolean)
       val merged = if (maxBy)
-        all.groupBy(col(keyCol))
+        all.groupBy(col(keyCol), col(partCol))
           .agg(max_by(struct(all.columns.map(col): _*), ordKey).as("__w"))
           .select(col("__w.*"))
       else {
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol))
+          .partitionBy(col(keyCol), col(partCol))
           .orderBy(orderCols.map(c => col(c).desc) :+ contentHash.desc: _*)
         all.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       }
+      val schema = MergeSink.nullable(StructType(
+        merged.schema.filterNot(_.name == partCol))).asInstanceOf[StructType]
 
-      // stage + swap instead of localCheckpoint + dynamic overwrite: the
-      // checkpoint existed only because the table dir is also a read source
-      // of the merge plan. Writing the winners to a SIBLING staging dir
-      // computes the merge exactly once (no block materialization + block
-      // re-read on the write path — one fewer job and one fewer pass over
-      // the touched buckets), then each touched bucket dir swaps in with
-      // filesystem renames. The staging dir carries a per-merge nonce:
-      // foreachBatch serializes the streaming path, but nothing enforced
-      // the single-writer assumption — two concurrent merges now cannot
-      // overwrite each other's staged output mid-swap (r19 ADVICE).
-      if (stageSwap) {
-        val stagingPath = new org.apache.hadoop.fs.Path(
-          tableDir + s"__staging-${java.lang.System.nanoTime()}")
-        try {
-          merged.write.partitionBy(partCol)
-            .mode(SaveMode.Overwrite).parquet(stagingPath.toString)
-          if (!fs.exists(tablePath)) fs.mkdirs(tablePath)
-          // each bucket swaps RECOVERABLY (r19 ADVICE): the live bucket is
-          // only touched when its staged replacement exists (a touched
-          // bucket can be absent from a non-deterministic batch plan
-          // evaluated twice — it must then be LEFT ALONE, not deleted),
-          // and it moves ASIDE (outside tableDir, invisible to readers)
-          // rather than being deleted before the rename — a crash between
-          // the two renames leaves both the staged and the aside copy on
-          // disk for recovery instead of neither.
-          val asideRoot = new org.apache.hadoop.fs.Path(
-            stagingPath.toString + "__aside")
-          for (p <- touched) {
-            val src = new org.apache.hadoop.fs.Path(stagingPath, s"$partCol=$p")
-            val dst = new org.apache.hadoop.fs.Path(tablePath, s"$partCol=$p")
-            if (fs.exists(src)) {
-              if (fs.exists(dst)) {
-                fs.mkdirs(asideRoot)
-                fs.rename(dst, new org.apache.hadoop.fs.Path(asideRoot, s"$partCol=$p"))
-              }
-              fs.rename(src, dst)
-            }
-          }
-          fs.delete(asideRoot, true)
-        } finally fs.delete(stagingPath, true)
-      } else {
-        // dynamic overwrite: only the touched part= directories are replaced;
-        // the checkpoint materializes because the table dir is also a read
-        // source of this plan
-        merged.localCheckpoint(true).write
-          .partitionBy(partCol)
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(SaveMode.Overwrite)
-          .parquet(tableDir)
-      }
-    } finally if (persistBatch) newPart.unpersist(blocking = false)
+      // stage + swap: the winners are computed exactly once, straight to a
+      // sibling staging dir (the table dir is also a read source of this
+      // plan, so it cannot be the write target), then each touched bucket
+      // dir swaps in with filesystem renames. The staging dir carries a
+      // per-merge nonce: two concurrent merges cannot overwrite each
+      // other's staged output mid-swap (r19 ADVICE).
+      val staging = stagingPath()
+      try {
+        merged.write.partitionBy(partCol)
+          .mode(SaveMode.Overwrite).parquet(staging.toString)
+        if (!fs.exists(tablePath) && !fs.mkdirs(tablePath))
+          throw new IOException(s"cannot create $tablePath")
+        // the schema goes first: every footer the swap brings in is then
+        // covered by it (the superset invariant)
+        if (!stored.contains(schema)) storeSchema(fs, schema, staging)
+        MergeSink.swapBuckets(fs, staging, tablePath, partCol, touched.toSeq)
+      } finally fs.delete(staging, true)
+    } finally newPart.unpersist(blocking = false)
   }
 
   /** Current table state (without the internal partition column). When a
@@ -181,10 +190,7 @@ final class MergeSink(
     * column is NULL (a feed that only stamps deletes, a schema-evolved
     * union) — live rows silently hidden. `<=>` keeps them. */
   def read(): DataFrame = {
-    // mergeSchema: generations written before a column was added lack it
-    // in their footers — the merged read null-fills (q257's contract)
-    val t = spark.read.option("mergeSchema", "true").parquet(tableDir)
-      .drop(partCol)
+    val t = scan(storedSchema(fileSystem)).drop(partCol)
     tombstoneCol.map(c => t.filter(!(col(c) <=> "true"))).getOrElse(t)
   }
 
@@ -200,12 +206,22 @@ final class MergeSink(
     * 'unable to infer schema'; an all-tombstone table simply keeps its
     * tombstones until fresh live rows arrive. */
   def purgeTombstones(): Unit = tombstoneCol.foreach { c =>
-    if (new java.io.File(tableDir).exists()) {
-      val live = spark.read.parquet(tableDir)
+    val fs = fileSystem
+    if (fs.exists(tablePath)) {
+      val stored = storedSchema(fs)
+      val live = scan(stored)
         .filter(!(col(c) <=> "true")).localCheckpoint(true)
       if (!live.isEmpty) {
-        live.write.partitionBy(partCol)
+        // one file per bucket, as merge() writes them
+        live.repartition(numBuckets, col(partCol)).write.partitionBy(partCol)
           .mode(SaveMode.Overwrite).parquet(tableDir)
+        // the overwrite replaced the whole directory, schema file included;
+        // every new footer carries the full stored schema, so until the
+        // file is back the fallback read sees the same columns
+        stored.foreach { schema =>
+          val staging = stagingPath()
+          try storeSchema(fs, schema, staging) finally fs.delete(staging, true)
+        }
       }
     }
   }
@@ -228,6 +244,61 @@ final class MergeSink(
 }
 
 object MergeSink {
+  /** The stored table schema, at the table root. */
+  val SchemaFile = "_graft_schema.json"
+
+  private def readSchema(fs: FileSystem, file: Path): Option[StructType] =
+    try {
+      val in = fs.open(file)
+      val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      Some(DataType.fromJson(json).asInstanceOf[StructType])
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Every field nullable, as a parquet write stores it. */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** `FileSystem.rename` reports most failures by returning false. */
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new IOException(s"rename $src -> $dst failed")
+
+  /** Swap each staged `partCol=p` bucket dir into `table`, RECOVERABLY
+    * (r19 ADVICE): a live bucket is only touched when its staged
+    * replacement exists (a touched bucket can be absent from a
+    * non-deterministic batch plan evaluated twice — it must then be LEFT
+    * ALONE, not deleted), and it moves ASIDE (outside the table, invisible
+    * to readers) rather than being deleted before the rename — a crash
+    * between the two renames leaves both the staged and the aside copy on
+    * disk. A rename that reports failure throws: going on would rename
+    * the staged bucket INTO a live one that failed to move aside, nesting
+    * `p/p`; a failed rename-in puts the aside copy back first. */
+  private[merge] def swapBuckets(fs: FileSystem, staging: Path, table: Path,
+                                 partCol: String, buckets: Seq[Long]): Unit = {
+    val asideRoot = new Path(staging.toString + "__aside")
+    for (p <- buckets) {
+      val src = new Path(staging, s"$partCol=$p")
+      val dst = new Path(table, s"$partCol=$p")
+      if (fs.exists(src)) {
+        val aside = new Path(asideRoot, s"$partCol=$p")
+        val moved = fs.exists(dst)
+        if (moved) {
+          if (!fs.mkdirs(asideRoot)) throw new IOException(s"cannot create $asideRoot")
+          rename(fs, dst, aside)
+        }
+        if (!fs.rename(src, dst)) {
+          if (moved) fs.rename(aside, dst)
+          throw new IOException(s"rename $src -> $dst failed")
+        }
+      }
+    }
+    fs.delete(asideRoot, true)
+  }
+
   /** Map-typed columns are unhashable (undefined iteration order) — shared
     * by MergeSink and [[VersionedSink]]'s content-hash tie-break. */
   private[merge] def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {

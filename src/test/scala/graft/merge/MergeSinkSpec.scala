@@ -1,5 +1,11 @@
 package graft.merge
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -7,6 +13,41 @@ import graft.SparkSpec
 /** O25/O26: latest-wins merge semantics, idempotence (at-least-once replay
   * tolerance), and backfill ∪ stream convergence. */
 class MergeSinkSpec extends SparkSpec {
+
+  /** Jobs started while `body` runs: (description, inside an SQL
+    * execution). File listing and footer schema merging both run as bare
+    * RDD jobs outside any SQL execution; listing also sets a description. */
+  private def jobsDuring(body: => Unit): Seq[(String, Boolean)] = {
+    val seen = new ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add((prop("spark.job.description").getOrElse(""),
+          prop("spark.sql.execution.id").isDefined))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // a listener gets events in order: once this job's start arrives,
+      // every job `body` started has arrived too
+      sc.setJobDescription("jobsDuring-sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == "jobsDuring-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.asScala.toSeq
+    assert(jobs.exists(_._1 == "jobsDuring-sentinel"), "listener saw no sentinel job")
+    jobs.filter(_._1 != "jobsDuring-sentinel")
+  }
+
+  private def assertNoListingOrFooterJob(jobs: Seq[(String, Boolean)]): Unit = {
+    assert(jobs.nonEmpty)
+    assert(!jobs.exists(_._1.startsWith("Listing leaf files")), s"listing job: $jobs")
+    assert(jobs.forall(_._2), s"job outside an SQL execution (footer merge): $jobs")
+  }
 
   private def changes(rows: (Long, String, Long)*): DataFrame = {
     val s = spark
@@ -207,22 +248,62 @@ class MergeSinkSpec extends SparkSpec {
   test("schema evolution on the merge path: batches may add or omit columns") {
     val s = spark
     import s.implicits._
-    val sink = new MergeSink(spark, tmpDir("merge-evolve") + "/t", "id",
-      Seq("ts"), numBuckets = 4)
+    val dir = tmpDir("merge-evolve") + "/t"
+    val sink = new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 4)
     sink.merge(changes((1L, "a1", 10L), (2L, "b1", 10L)))
     // ADD a column: old generations must null-fill through the merged read
     sink.merge(Seq((2L, "b2", 20L, "gold"), (3L, "c1", 20L, "silver"))
       .toDF("id", "name", "ts", "tier"))
-    val s1 = sink.read().orderBy("id").collect()
+    def tiers(sk: MergeSink) = sk.read().orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1),
-        Option(r.getAs[String]("tier"))))
-    assert(s1.toSeq === Seq((1L, "a1", None), (2L, "b2", Some("gold")),
+        Option(r.getAs[String]("tier")))).toSeq
+    val s1 = tiers(sink)
+    assert(s1 === Seq((1L, "a1", None), (2L, "b2", Some("gold")),
       (3L, "c1", Some("silver"))))
+    // a fresh sink on the directory reads the same through the stored
+    // schema, and so does the footer-merged fallback once it is gone
+    assert(tiers(new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 4)) === s1)
+    val schemaFile = new Path(dir, MergeSink.SchemaFile)
+    val fs = schemaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(schemaFile, false))
+    assert(tiers(sink) === s1)
     // OMIT the column: the new winner's tier is NULL, not a failure and
     // not a stale carry-over
     sink.merge(changes((3L, "c2", 30L)))
     val s2 = sink.read().filter("id = 3").collect()
       .map(r => (r.getString(1), Option(r.getAs[String]("tier"))))
     assert(s2.toSeq === Seq(("c2", None)))
+  }
+
+  test("a 64-bucket table merges and reads without a listing or footer-merge job") {
+    val sink = new MergeSink(spark, tmpDir("merge-jobs") + "/t", "id", Seq("ts"))
+    sink.merge(changes((1L to 2000L).map(i => (i, s"n$i", 1L)): _*))
+    assertNoListingOrFooterJob(jobsDuring(
+      sink.merge(changes((1L to 300L).map(i => (i * 6, s"m$i", 2L)): _*))))
+    var n = 0L
+    assertNoListingOrFooterJob(jobsDuring { n = sink.read().count() })
+    assert(n === 2000L)
+  }
+
+  test("purgeTombstones keeps the stored schema: a fresh sink reads an added column") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("merge-purge-schema") + "/t"
+    val sink = new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 8,
+      tombstoneCol = Some("__deleted"))
+    sink.merge(delChanges((1L, "a1", 10L, "false"), (2L, "b1", 10L, "false"),
+      (3L, "c1", 10L, "false")))
+    sink.merge(Seq((2L, "b2", 20L, "false", "gold"), (3L, "-", 20L, "true", "x"))
+      .toDF("id", "name", "ts", "__deleted", "tier"))
+    sink.purgeTombstones()
+    val fresh = new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 8,
+      tombstoneCol = Some("__deleted"))
+    var rows = Seq.empty[(Long, String, Option[String])]
+    assertNoListingOrFooterJob(jobsDuring {
+      rows = fresh.read().orderBy("id").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[String]("name"),
+          Option(r.getAs[String]("tier")))).toSeq
+    })
+    assert(rows === Seq((1L, "a1", None), (2L, "b2", Some("gold"))))
   }
 }
