@@ -325,13 +325,13 @@ object Bench {
           f"(canaries ${smp.lead}%.3f/${smp.trail}%.3f vs med $cMed%.3f; " +
           f"cycle wakeups ${wakeups(smp.wIdx)}%.1f/${wakeups(smp.wIdx + 1)}%.1f " +
           f"vs med $wMed%.1f us), retry $attempts")
-        // fresh wakeup probes bracket the retry (fewer rounds: the retry
-        // needs a point reading, not the cycle probe's precision)
-        val wLead = wakeupCanary(rounds = 800)
+        // fresh wakeup probes bracket the retry, as long as the cycle
+        // probes whose median they are compared against
+        val wLead = wakeupCanary()
         val lead = canary(); canaries += lead
         val t = timeOne(smp.name, smp.rep)
         val trail = canary(); canaries += trail
-        val wTrail = wakeupCanary(rounds = 800)
+        val wTrail = wakeupCanary()
         // only adopt the retry (time AND taint verdict) when it ran; a
         // FAILED retry must not clear the original taint, else a hot
         // measurement ships with tainted_reps = 0

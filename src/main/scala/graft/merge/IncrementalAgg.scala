@@ -1,6 +1,7 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -24,9 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * epochs, and replays after a checkpoint rollback must re-seed the state
   * (the standard incremental-view contract).
   *
-  * Layout is MergeSink's: hash-bucketed `part=pmod(xxhash64(key), n)`
+  * Layout is MergeSink's: hash-bucketed `__part=pmod(xxhash64(key), n)`
   * directories, only the touched buckets rewritten and swapped in through
-  * [[MergeSink.swapBuckets]], bounded driver state (the touched-bucket id
+  * [[MergeSink.rewriteBuckets]], bounded driver state (the touched-bucket id
   * list).
   */
 final class IncrementalAgg(
@@ -35,26 +36,17 @@ final class IncrementalAgg(
     keyCol: String,
     combiners: Seq[(String, Column => Column)],
     numBuckets: Int = 64) {
-
-  private val partCol = "__part"
-
-  private def withPart(df: DataFrame): DataFrame =
-    df.withColumn(partCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
+  import MergeSink.{PartCol, rewriteBuckets, touchedBuckets, withPart}
 
   /** Fold one batch of per-key PARTIALS (columns: key + every combiner
     * column) into the view. */
   def update(partials: DataFrame): Unit = {
-    val spark = this.spark
-    // A/B dial shared with MergeSink (default ON): the off leg is the r18
-    // localCheckpoint + dynamic-partition-overwrite path
-    val stageSwap = spark.conf
-      .getOption("spark.graft.merge.stageswap").forall(_.toBoolean)
-    val newPart = withPart(partials)
+    val newPart = withPart(partials, keyCol, numBuckets)
     // existence must resolve through the Hadoop FileSystem for tableDir's
     // scheme: java.io.File is local-only, and on HDFS/S3 (the 100 TB
     // deployment) it would silently report the stored state absent, making
     // every update overwrite the view with only the latest batch's partials
-    val tablePath = new org.apache.hadoop.fs.Path(tableDir)
+    val tablePath = new Path(tableDir)
     val tableFs = tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // The partials plan is evaluated twice (a key-column-pruned probe, then
     // the fold): the r19 same-JVM A/B measured persisting it across the two
@@ -63,53 +55,27 @@ final class IncrementalAgg(
     // 1.30x SLOWER at bench protocol (BENCH_TIMINGS_r20mid q96 4.27→5.55 —
     // the parquet write+readback costs more than the pruned re-evaluation)
     // and was REVERTED. The probe stays.
-    val touched = newPart.select(partCol).distinct()
-      .collect().map(_.getLong(0)) // bounded by numBuckets — driver-safe
+    val touched = touchedBuckets(newPart)
     if (touched.isEmpty) return
     val existingOpt =
       if (tableFs.exists(tablePath))
-        Some(spark.read.parquet(tableDir)
-          .filter(col(partCol).isin(touched.toSeq: _*)))
+        Some(spark.read.parquet(tableDir).filter(col(PartCol).isin(touched: _*)))
       else None
     val all = existingOpt.map(_.unionByName(newPart)).getOrElse(newPart)
     val merged = all
-      .groupBy(col(keyCol), col(partCol))
+      .groupBy(col(keyCol), col(PartCol))
       .agg(combiners.head._2(col(combiners.head._1)).as(combiners.head._1),
         combiners.tail.map { case (c, f) => f(col(c)).as(c) }: _*)
-
-    // stage + swap instead of localCheckpoint + dynamic overwrite (see
-    // MergeSink.merge): the fold is computed exactly once, straight to a
-    // nonce'd sibling staging dir, then the touched bucket dirs rename
-    // into place RECOVERABLY (r19 ADVICE — this matters MORE here than
-    // in MergeSink, because a fold is NOT idempotent to re-apply): the
-    // live bucket is only touched when its staged replacement exists,
-    // and it moves aside (outside tableDir, invisible to readers) before
-    // the staged copy renames in — a crash between the two renames
-    // leaves the accumulated state recoverable from the aside copy
-    // instead of destroying it, and the next update's staging write can
-    // no longer clobber an orphaned staged copy (fresh nonce per fold).
-    if (stageSwap) {
-      val stagingPath = new org.apache.hadoop.fs.Path(
-        tableDir + s"__staging-${java.lang.System.nanoTime()}")
-      try {
-        merged.write.partitionBy(partCol)
-          .mode(SaveMode.Overwrite).parquet(stagingPath.toString)
-        if (!tableFs.exists(tablePath) && !tableFs.mkdirs(tablePath))
-          throw new java.io.IOException(s"cannot create $tablePath")
-        MergeSink.swapBuckets(tableFs, stagingPath, tablePath, partCol, touched.toSeq)
-      } finally tableFs.delete(stagingPath, true)
-    } else {
-      merged.localCheckpoint(true).write
-        .partitionBy(partCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite)
-        .parquet(tableDir)
-    }
+    // the staged rewrite matters MORE here than in MergeSink, because a
+    // fold is NOT idempotent to re-apply: a crash between a bucket's two
+    // renames leaves the accumulated state recoverable from the aside copy
+    // instead of destroying it
+    rewriteBuckets(tableFs, tablePath, touched, merged)
   }
 
   /** Current view state (without the internal partition column). */
   def read(): DataFrame =
-    spark.read.parquet(tableDir).drop(partCol)
+    spark.read.parquet(tableDir).drop(PartCol)
 
   /** Continuous maintenance: every micro-batch's partials fold in through
     * the same merge. `toPartials` must produce one row per key touched by

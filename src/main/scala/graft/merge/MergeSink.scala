@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * staging directory (each bucket by one task, as one file) and renames
   * each into place — at 100 TB a micro-batch touching 0.1% of keys
   * rewrites ~0.1% of the table, not all of it. Within a rewrite, the merge
-  * itself is one per-key `max_by` aggregate picking the same winner as the
-  * `row_number` latest-wins window the batch-twin query q16 verifies
-  * against DuckDB.
+  * itself is one per-key `max_by` aggregate ([[MergeSink.latestPerKey]])
+  * picking the same winner as the `row_number` latest-wins window the
+  * batch-twin query q16 verifies against DuckDB.
   *
   * Schema: the table's evolved schema lives in [[MergeSink.SchemaFile]] at
   * the table root (`_`-prefixed, so Spark's file listing skips it), and
@@ -43,12 +43,9 @@ final class MergeSink(
     orderCols: Seq[String],
     numBuckets: Int = 64,
     tombstoneCol: Option[String] = None) {
+  import MergeSink._
 
-  private val partCol = "__part"
   private val tablePath = new Path(tableDir)
-
-  private def withPart(df: DataFrame): DataFrame =
-    df.withColumn(partCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
 
   // existence through the Hadoop FileSystem for tableDir's scheme:
   // java.io.File is local-only and would report HDFS/S3 state absent
@@ -56,7 +53,7 @@ final class MergeSink(
     tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def storedSchema(fs: FileSystem): Option[StructType] =
-    MergeSink.readSchema(fs, new Path(tablePath, MergeSink.SchemaFile))
+    readSchema(fs, new Path(tablePath, SchemaFile))
 
   /** The whole table, bucket column included: with the stored schema when
     * there is one, else by merging every footer (mergeSchema: generations
@@ -68,16 +65,12 @@ final class MergeSink(
 
   /** Replace the stored schema: staged under `staging`, then renamed in. */
   private def storeSchema(fs: FileSystem, schema: StructType, staging: Path): Unit = {
-    val staged = new Path(staging, MergeSink.SchemaFile)
-    val out = fs.create(staged, true)
-    try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val live = new Path(tablePath, MergeSink.SchemaFile)
+    val staged = new Path(staging, SchemaFile)
+    writeText(fs, staged, schema.json)
+    val live = new Path(tablePath, SchemaFile)
     fs.delete(live, false)
-    MergeSink.rename(fs, staged, live)
+    rename(fs, staged, live)
   }
-
-  private def stagingPath(): Path =
-    new Path(tableDir + s"__staging-${java.lang.System.nanoTime()}")
 
   /** Merge one batch of change rows into the table: latest row per key wins,
     * ordering by `orderCols` (e.g. change timestamp, then a unique change id)
@@ -94,25 +87,24 @@ final class MergeSink(
     // the batch has two consumers (the touched-bucket probe and the merge
     // union) — persist so an expensive batch source (a parsed JSON
     // micro-batch, a computed change set) is evaluated once, not twice
-    val newPart = withPart(batch)
+    val newPart = withPart(batch, keyCol, numBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = newPart.select(partCol).distinct()
-        .collect().map(_.getLong(0)) // bounded by numBuckets — driver-safe
+      val touched = touchedBuckets(newPart)
       if (touched.isEmpty) return
 
       val fs = fileSystem
       val exists = fs.exists(tablePath)
       val stored = if (exists) storedSchema(fs) else None
       val existingOpt =
-        if (exists) Some(scan(stored).filter(col(partCol).isin(touched.toSeq: _*)))
+        if (exists) Some(scan(stored).filter(col(PartCol).isin(touched: _*)))
         else None
       // allowMissingColumns both ways: a batch may ADD a column (old rows
       // null-fill) or OMIT one the table already has (new rows null-fill) —
       // the lakehouse evolution contract, never a hard failure mid-stream.
       // One task per bucket: hash-partitioned on the bucket column into at
       // most as many partitions as touched buckets, so the per-key pick
-      // below (grouped by key AND bucket, which this partitioning already
+      // (grouped by key AND bucket, which this partitioning already
       // satisfies) runs without another shuffle and writes each touched
       // bucket as exactly one file.
       val tasks = math.min(touched.length,
@@ -120,60 +112,14 @@ final class MergeSink(
       val all = existingOpt
         .map(_.unionByName(newPart, allowMissingColumns = true))
         .getOrElse(newPart)
-        .repartition(tasks, col(partCol))
-
-      // column order fixed by name so the hash is layout-independent; map-typed
-      // columns are excluded (unhashable — their iteration order is undefined,
-      // which is also why they could never break ties deterministically)
-      val hashable = all.schema.fields.toIndexedSeq
-        .filter(f => !MergeSink.hasMap(f.dataType))
-        .map(_.name).sorted.map(c => col(c))
-      val contentHash =
-        if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
-      // latest-wins as a per-key max_by aggregate (r20): the winner under
-      // `row_number() OVER (PARTITION BY key ORDER BY orderCols DESC,
-      // hash DESC) = 1` is exactly the row whose (orderCols, hash) tuple
-      // is the lexicographic MAX — desc ordering puts NULL last, struct
-      // comparison puts NULL first ascending, so the two agree on the
-      // winner (identical full-row ties are the same row either way).
-      // Adding the bucket to the grouping changes no group: it is a
-      // function of the key.
-      val ordKey = struct(orderCols.map(c => col(c)) :+ contentHash: _*)
-      // A/B dial (default ON): the off leg is the r19 row_number window
-      // form — MergeSinkSpec pins the two forms pick the same winner
-      val maxBy = spark.conf
-        .getOption("spark.graft.merge.maxby").forall(_.toBoolean)
-      val merged = if (maxBy)
-        all.groupBy(col(keyCol), col(partCol))
-          .agg(max_by(struct(all.columns.map(col): _*), ordKey).as("__w"))
-          .select(col("__w.*"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol), col(partCol))
-          .orderBy(orderCols.map(c => col(c).desc) :+ contentHash.desc: _*)
-        all.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
-      val schema = MergeSink.nullable(StructType(
-        merged.schema.filterNot(_.name == partCol))).asInstanceOf[StructType]
-
-      // stage + swap: the winners are computed exactly once, straight to a
-      // sibling staging dir (the table dir is also a read source of this
-      // plan, so it cannot be the write target), then each touched bucket
-      // dir swaps in with filesystem renames. The staging dir carries a
-      // per-merge nonce: two concurrent merges cannot overwrite each
-      // other's staged output mid-swap (r19 ADVICE).
-      val staging = stagingPath()
-      try {
-        merged.write.partitionBy(partCol)
-          .mode(SaveMode.Overwrite).parquet(staging.toString)
-        if (!fs.exists(tablePath) && !fs.mkdirs(tablePath))
-          throw new IOException(s"cannot create $tablePath")
-        // the schema goes first: every footer the swap brings in is then
-        // covered by it (the superset invariant)
-        if (!stored.contains(schema)) storeSchema(fs, schema, staging)
-        MergeSink.swapBuckets(fs, staging, tablePath, partCol, touched.toSeq)
-      } finally fs.delete(staging, true)
+        .repartition(tasks, col(PartCol))
+      val merged = latestPerKey(all, keyCol, orderCols)
+      val schema = nullable(StructType(
+        merged.schema.filterNot(_.name == PartCol))).asInstanceOf[StructType]
+      // the schema goes first: every footer the swap brings in is then
+      // covered by it (the superset invariant)
+      rewriteBuckets(fs, tablePath, touched, merged, beforeSwap = staging =>
+        if (!stored.contains(schema)) storeSchema(fs, schema, staging))
     } finally newPart.unpersist(blocking = false)
   }
 
@@ -190,7 +136,7 @@ final class MergeSink(
     * column is NULL (a feed that only stamps deletes, a schema-evolved
     * union) — live rows silently hidden. `<=>` keeps them. */
   def read(): DataFrame = {
-    val t = scan(storedSchema(fileSystem)).drop(partCol)
+    val t = scan(storedSchema(fileSystem)).drop(PartCol)
     tombstoneCol.map(c => t.filter(!(col(c) <=> "true"))).getOrElse(t)
   }
 
@@ -213,13 +159,13 @@ final class MergeSink(
         .filter(!(col(c) <=> "true")).localCheckpoint(true)
       if (!live.isEmpty) {
         // one file per bucket, as merge() writes them
-        live.repartition(numBuckets, col(partCol)).write.partitionBy(partCol)
+        live.repartition(numBuckets, col(PartCol)).write.partitionBy(PartCol)
           .mode(SaveMode.Overwrite).parquet(tableDir)
         // the overwrite replaced the whole directory, schema file included;
         // every new footer carries the full stored schema, so until the
         // file is back the fallback read sees the same columns
         stored.foreach { schema =>
-          val staging = stagingPath()
+          val staging = stagingPath(tablePath)
           try storeSchema(fs, schema, staging) finally fs.delete(staging, true)
         }
       }
@@ -247,12 +193,79 @@ object MergeSink {
   /** The stored table schema, at the table root. */
   val SchemaFile = "_graft_schema.json"
 
-  private def readSchema(fs: FileSystem, file: Path): Option[StructType] =
+  /** The bucket column of every merge-layer table. */
+  private[merge] val PartCol = "__part"
+
+  /** `df` with its key's bucket, `pmod(xxhash64(key), numBuckets)`. */
+  private[merge] def withPart(df: DataFrame, keyCol: String, numBuckets: Int): DataFrame =
+    df.withColumn(PartCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
+
+  /** The buckets `df` (which carries [[PartCol]]) touches — bounded by the
+    * bucket count, so driver-safe. */
+  private[merge] def touchedBuckets(df: DataFrame): Seq[Long] =
+    df.select(PartCol).distinct().collect().map(_.getLong(0)).toSeq
+
+  /** Latest row per key of `all` (which carries [[PartCol]]): ordered by
+    * `orderCols`, all descending, then by a content hash of the full row, so
+    * the winner is a pure function of row content. One per-key `max_by`
+    * aggregate: the winner under `row_number() OVER (PARTITION BY key ORDER
+    * BY orderCols DESC, hash DESC) = 1` is exactly the row whose (orderCols,
+    * hash) tuple is the lexicographic MAX — desc ordering puts NULL last,
+    * struct comparison puts NULL first ascending, so the two agree
+    * (identical full-row ties are the same row either way). Grouping by the
+    * bucket too changes no group: it is a function of the key. */
+  private[merge] def latestPerKey(all: DataFrame, keyCol: String,
+                                  orderCols: Seq[String]): DataFrame = {
+    // column order fixed by name so the hash is layout-independent; map-typed
+    // columns are excluded (unhashable — their iteration order is undefined,
+    // which is also why they could never break ties deterministically)
+    val hashable = all.schema.fields.toIndexedSeq
+      .filter(f => !hasMap(f.dataType)).map(_.name).sorted.map(c => col(c))
+    val contentHash = if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
+    val ordKey = struct(orderCols.map(c => col(c)) :+ contentHash: _*)
+    all.groupBy(col(keyCol), col(PartCol))
+      .agg(max_by(struct(all.columns.map(col): _*), ordKey).as("__w"))
+      .select(col("__w.*"))
+  }
+
+  /** A sibling of `table` for one rewrite's staged output. The nonce keeps
+    * two concurrent rewrites from overwriting each other's staged output
+    * mid-swap. */
+  private def stagingPath(table: Path): Path =
+    new Path(table.toString + s"__staging-${java.lang.System.nanoTime()}")
+
+  /** Replace the `buckets` of `table` with `rows` (partitioned by
+    * [[PartCol]]): `rows` are computed exactly once, straight to a staging
+    * dir (the table is also a read source of their plan, so it cannot be
+    * the write target), then `beforeSwap` runs on the staging dir and each
+    * bucket swaps in by [[swapBuckets]]. The staging dir is deleted either
+    * way. */
+  private[merge] def rewriteBuckets(fs: FileSystem, table: Path, buckets: Seq[Long],
+                                    rows: DataFrame,
+                                    beforeSwap: Path => Unit = _ => ()): Unit = {
+    val staging = stagingPath(table)
     try {
-      val in = fs.open(file)
-      val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      Some(DataType.fromJson(json).asInstanceOf[StructType])
-    } catch { case _: java.io.FileNotFoundException => None }
+      rows.write.partitionBy(PartCol).mode(SaveMode.Overwrite).parquet(staging.toString)
+      if (!fs.exists(table) && !fs.mkdirs(table))
+        throw new IOException(s"cannot create $table")
+      beforeSwap(staging)
+      swapBuckets(fs, staging, table, buckets)
+    } finally fs.delete(staging, true)
+  }
+
+  private[merge] def writeText(fs: FileSystem, file: Path, text: String): Unit = {
+    val out = fs.create(file, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  private[merge] def readText(fs: FileSystem, file: Path): String = {
+    val in = fs.open(file)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  private def readSchema(fs: FileSystem, file: Path): Option[StructType] =
+    try Some(DataType.fromJson(readText(fs, file)).asInstanceOf[StructType])
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Every field nullable, as a parquet write stores it. */
   private def nullable(dt: DataType): DataType = dt match {
@@ -264,10 +277,10 @@ object MergeSink {
   }
 
   /** `FileSystem.rename` reports most failures by returning false. */
-  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+  private[merge] def rename(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst)) throw new IOException(s"rename $src -> $dst failed")
 
-  /** Swap each staged `partCol=p` bucket dir into `table`, RECOVERABLY
+  /** Swap each staged `__part=p` bucket dir into `table`, RECOVERABLY
     * (r19 ADVICE): a live bucket is only touched when its staged
     * replacement exists (a touched bucket can be absent from a
     * non-deterministic batch plan evaluated twice — it must then be LEFT
@@ -277,14 +290,14 @@ object MergeSink {
     * disk. A rename that reports failure throws: going on would rename
     * the staged bucket INTO a live one that failed to move aside, nesting
     * `p/p`; a failed rename-in puts the aside copy back first. */
-  private[merge] def swapBuckets(fs: FileSystem, staging: Path, table: Path,
-                                 partCol: String, buckets: Seq[Long]): Unit = {
+  private def swapBuckets(fs: FileSystem, staging: Path, table: Path,
+                          buckets: Seq[Long]): Unit = {
     val asideRoot = new Path(staging.toString + "__aside")
     for (p <- buckets) {
-      val src = new Path(staging, s"$partCol=$p")
-      val dst = new Path(table, s"$partCol=$p")
+      val src = new Path(staging, s"$PartCol=$p")
+      val dst = new Path(table, s"$PartCol=$p")
       if (fs.exists(src)) {
-        val aside = new Path(asideRoot, s"$partCol=$p")
+        val aside = new Path(asideRoot, s"$PartCol=$p")
         val moved = fs.exists(dst)
         if (moved) {
           if (!fs.mkdirs(asideRoot)) throw new IOException(s"cannot create $asideRoot")
@@ -299,12 +312,11 @@ object MergeSink {
     fs.delete(asideRoot, true)
   }
 
-  /** Map-typed columns are unhashable (undefined iteration order) — shared
-    * by MergeSink and [[VersionedSink]]'s content-hash tie-break. */
-  private[merge] def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case _: org.apache.spark.sql.types.MapType => true
-    case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => hasMap(f.dataType))
-    case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
+  /** Map-typed columns are unhashable (undefined iteration order). */
+  private def hasMap(dt: DataType): Boolean = dt match {
+    case _: MapType => true
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case a: ArrayType => hasMap(a.elementType)
     case _ => false
   }
 }

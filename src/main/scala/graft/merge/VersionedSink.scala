@@ -1,10 +1,6 @@
 package graft.merge
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,19 +12,22 @@ import org.apache.spark.sql.functions._
   *
   *  - Every merge writes its rewritten buckets into a FRESH version
   *    directory `data/v=<n>/__part=<p>/…` — never touching earlier
-  *    versions' files (contrast MergeSink's dynamic overwrite, which
-  *    reclaims space eagerly but forfeits history).
+  *    versions' files.
   *  - A manifest per version maps each bucket to the version that last
   *    rewrote it. `read(v)` unions, per writer version, only the buckets
   *    that version still owns at v — partition-pruned directory reads, no
   *    file listing of untouched history.
-  *  - Crash safety: data first, manifest last via atomic rename — a crash
+  *  - Crash safety: data first, manifest last via rename — a crash
   *    between the two leaves an orphan data dir that the NEXT merge of the
   *    same version number simply overwrites; no manifest ever references
-  *    half-written files.
+  *    half-written files. A rename that reports failure throws, and the
+  *    version is not committed.
   *  - `vacuum(retain)` deletes version directories no retained manifest
   *    references, making the storage cost a policy knob (the warehouse's
   *    time-travel window), not an unbounded tax.
+  *
+  * All I/O goes through the Hadoop `FileSystem` of `tableDir`'s scheme, so
+  * manifests live beside the data on any filesystem.
   *
   * Scale shape: identical to MergeSink's — a merge reads and rewrites ONLY
   * the buckets its batch touches (change-volume cost at 100 TB); a
@@ -41,28 +40,32 @@ final class VersionedSink(
     keyCol: String,
     orderCols: Seq[String],
     numBuckets: Int = 64) {
+  import MergeSink.{PartCol, latestPerKey, readText, rename, touchedBuckets, withPart, writeText}
 
-  private val partCol = "__part"
-  private def manifestDir: Path = Paths.get(tableDir, "_manifests")
+  private val manifestDir = new Path(tableDir, "_manifests")
+  private def manifest(v: Int): Path = new Path(manifestDir, f"v$v%05d.manifest")
   private def dataDir(v: Int): String = s"$tableDir/data/v=$v"
 
-  private def withPart(df: DataFrame): DataFrame =
-    df.withColumn(partCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
+  private def fileSystem: FileSystem =
+    manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Newest committed version; 0 = empty table. */
-  def currentVersion: Int =
-    if (!Files.exists(manifestDir)) 0
-    else Files.list(manifestDir).iterator().asScala
-      .flatMap(p => "^v(\\d+)\\.manifest$".r.findFirstMatchIn(p.getFileName.toString))
+  def currentVersion: Int = {
+    val fs = fileSystem
+    if (!fs.exists(manifestDir)) 0
+    else fs.listStatus(manifestDir).iterator
+      .flatMap(st => "^v(\\d+)\\.manifest$".r.findFirstMatchIn(st.getPath.getName))
       .map(_.group(1).toInt).foldLeft(0)(math.max)
+  }
 
   /** bucket → version that last rewrote it, as of `version`. */
   private def writers(version: Int): Map[Long, Int] = {
     require(version >= 1 && version <= currentVersion,
       s"version $version outside [1, $currentVersion]")
-    require(Files.exists(manifestDir.resolve(f"v$version%05d.manifest")),
+    val fs = fileSystem
+    require(fs.exists(manifest(version)),
       s"version $version has been vacuumed (outside the retained window)")
-    Files.readAllLines(manifestDir.resolve(f"v$version%05d.manifest")).asScala
+    readText(fs, manifest(version)).split('\n').iterator
       .filter(_.nonEmpty)
       .map { line =>
         val Array(b, w) = line.split(','); b.toLong -> w.toInt
@@ -75,21 +78,12 @@ final class VersionedSink(
   def merge(batch: DataFrame): Int = {
     val cur = currentVersion
     val next = cur + 1
-    // A/B dial shared with MergeSink (default ON): the off leg is the r18
-    // localCheckpoint path
-    val stageSwap = spark.conf
-      .getOption("spark.graft.merge.stageswap").forall(_.toBoolean)
     // two consumers (touched probe + merge union): persist so an expensive
     // batch source is evaluated once — see MergeSink.merge
-    val newPart0 = withPart(batch)
-    val persistBatch = spark.conf
-      .getOption("spark.graft.merge.persistbatch").forall(_.toBoolean)
-    val newPart = if (persistBatch)
-      newPart0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else newPart0
+    val newPart = withPart(batch, keyCol, numBuckets)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = newPart.select(partCol).distinct()
-        .collect().map(_.getLong(0)).toSet // bounded by numBuckets — driver-safe
+      val touched = touchedBuckets(newPart).toSet
       if (touched.isEmpty) return cur
 
       val existing =
@@ -100,50 +94,22 @@ final class VersionedSink(
         }
       val all = existing.map(_.unionByName(newPart)).getOrElse(newPart)
 
-      val hashable = all.schema.fields.toIndexedSeq
-        .filter(f => !MergeSink.hasMap(f.dataType))
-        .map(_.name).sorted.map(c => col(c))
-      val contentHash =
-        if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
-      // latest-wins as a COMBINABLE max_by aggregate — same winner as the
-      // historical per-key window, pre-reduced map-side (see
-      // MergeSink.merge for the ordering-equivalence argument)
-      val ordKey = struct(orderCols.map(c => col(c)) :+ contentHash: _*)
-      // no localCheckpoint (unlike MergeSink's historical need): every merge
-      // writes a FRESH version directory, so the write target is never also
-      // a read source of this plan — the winners stream straight to parquet,
-      // computed exactly once
-      val maxBy = spark.conf
-        .getOption("spark.graft.merge.maxby").forall(_.toBoolean)
-      val merged0 = if (maxBy)
-        all.groupBy(col(keyCol))
-          .agg(max_by(struct(all.columns.map(col): _*), ordKey).as("__w"))
-          .select(col("__w.*"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol))
-          .orderBy(orderCols.map(c => col(c).desc) :+ contentHash.desc: _*)
-        all.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
-      val merged = if (stageSwap) merged0 else merged0.localCheckpoint(true)
-
       // data first (an orphan dir from a crashed attempt is overwritten),
-      // manifest last and atomically — the commit point
-      merged.write.partitionBy(partCol)
+      // manifest last by rename — the commit point. Every merge writes a
+      // FRESH version directory, so the write target is never also a read
+      // source of this plan: the winners stream straight to parquet
+      latestPerKey(all, keyCol, orderCols).write.partitionBy(PartCol)
         .mode(SaveMode.Overwrite).parquet(dataDir(next))
       val newWriters =
         (if (cur == 0) Map.empty[Long, Int] else writers(cur)) ++
           touched.iterator.map(_ -> next)
-      Files.createDirectories(manifestDir)
-      val tmp = manifestDir.resolve(f".v$next%05d.tmp")
-      Files.write(tmp, newWriters.toSeq.sortBy(_._1)
-        .map { case (b, v) => s"$b,$v" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, manifestDir.resolve(f"v$next%05d.manifest"),
-        StandardCopyOption.ATOMIC_MOVE)
+      val fs = fileSystem
+      val tmp = new Path(manifestDir, f".v$next%05d.tmp")
+      writeText(fs, tmp, newWriters.toSeq.sortBy(_._1)
+        .map { case (b, v) => s"$b,$v" }.mkString("\n"))
+      rename(fs, tmp, manifest(next))
       next
-    } finally if (persistBatch) newPart.unpersist(blocking = false)
+    } finally newPart.unpersist(blocking = false)
   }
 
   /** Union of each writer version's still-owned buckets. */
@@ -152,7 +118,7 @@ final class VersionedSink(
     val parts = byBucket.groupBy(_._2).toSeq.sortBy(_._1).map {
       case (writer, buckets) =>
         spark.read.parquet(dataDir(writer))
-          .filter(col(partCol).isin(buckets.keys.toSeq: _*))
+          .filter(col(PartCol).isin(buckets.keys.toSeq: _*))
     }
     Some(parts.reduce(_ unionByName _))
   }
@@ -161,7 +127,7 @@ final class VersionedSink(
   def read(version: Int): DataFrame =
     readOwned(writers(version))
       .getOrElse(spark.emptyDataFrame)
-      .drop(partCol)
+      .drop(PartCol)
 
   def read(): DataFrame = read(currentVersion)
 
@@ -174,16 +140,9 @@ final class VersionedSink(
     val keepFrom = math.max(1, cur - retain + 1)
     val live = (keepFrom to cur).flatMap(v => writers(v).values).toSet
     val dropped = (1 until keepFrom).filterNot(live)
-    for (v <- dropped) {
-      def rm(p: Path): Unit = {
-        if (Files.isDirectory(p))
-          Files.list(p).iterator().asScala.toSeq.foreach(rm)
-        Files.deleteIfExists(p)
-      }
-      rm(Paths.get(dataDir(v)))
-    }
-    for (v <- 1 until keepFrom)
-      Files.deleteIfExists(manifestDir.resolve(f"v$v%05d.manifest"))
+    val fs = fileSystem
+    for (v <- dropped) fs.delete(new Path(dataDir(v)), true)
+    for (v <- 1 until keepFrom) fs.delete(manifest(v), false)
     dropped
   }
 }

@@ -18,14 +18,12 @@ class AsideRenameFailsFs extends RawLocalFileSystem {
     !dst.toString.contains("__aside") && super.rename(src, dst)
 }
 
-/** r19 optimization pins for the staged-swap merge write path (the
-  * localCheckpoint + dynamic-partition-overwrite replacement): the winners
-  * are written once to a sibling staging directory and the touched bucket
-  * dirs rename into place. These tests pin the physical contract the
-  * optimization relies on — untouched buckets are never rewritten, each
-  * bucket is one file, no staging residue survives a merge, a rename that
-  * reports failure aborts the swap, and the IncrementalAgg dial's off leg
-  * (the r18 path) produces the identical table state. */
+/** Pins for the staged bucket rewrite that MergeSink and IncrementalAgg
+  * share ([[MergeSink.rewriteBuckets]]): the new rows are written once to
+  * a sibling staging directory and the touched bucket dirs rename into
+  * place. These tests pin its physical contract — untouched buckets are
+  * never rewritten, each bucket is one file, no staging residue survives a
+  * merge, and a rename that reports failure aborts the swap. */
 class StagedSwapSpec extends SparkSpec {
 
   private def changes(rows: (Long, String, Long)*): DataFrame = {
@@ -101,37 +99,16 @@ class StagedSwapSpec extends SparkSpec {
     val sink = new MergeSink(spark, table, "id", Seq("ts"), numBuckets = 4)
     sink.merge(changes((1L, "a", 1L), (2L, "b", 1L)))
     sink.merge(changes((1L, "a2", 2L)))
-    assert(!new File(table + "__staging").exists(), "staging dir left behind")
+    // staging dirs are nonce'd siblings: `t__staging-<nanos>`
+    def residue(prefix: String) =
+      new File(root).list().filter(_.startsWith(prefix + "__staging")).toSeq
+    assert(residue("t") === Nil, "staging dir left behind")
     val agg = new IncrementalAgg(spark, s"$root/v", "id",
       Seq("n" -> (org.apache.spark.sql.functions.sum(_))), numBuckets = 4)
     val s = spark
     import s.implicits._
     agg.update(Seq((1L, 2L), (2L, 3L)).toDF("id", "n"))
     agg.update(Seq((1L, 5L)).toDF("id", "n"))
-    assert(!new File(s"$root/v__staging").exists(), "IncrementalAgg staging residue")
-  }
-
-  test("stageswap off (r18 checkpoint + dynamic overwrite) yields the identical state") {
-    def run(dial: String, tag: String): (Seq[(Long, String)], Seq[(Long, Long)]) = {
-      spark.conf.set("spark.graft.merge.stageswap", dial)
-      try {
-        val root = tmpDir(s"swap-ab-$tag")
-        val sink = new MergeSink(spark, s"$root/t", "id", Seq("ts"), numBuckets = 4)
-        sink.merge(changes((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)))
-        sink.merge(changes((2L, "b2", 5L), (4L, "d", 2L)))
-        val st = sink.read().orderBy("id").collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSeq
-        val agg = new IncrementalAgg(spark, s"$root/v", "id",
-          Seq("n" -> (org.apache.spark.sql.functions.sum(_))), numBuckets = 4)
-        val s = spark
-        import s.implicits._
-        agg.update(Seq((1L, 2L), (2L, 3L)).toDF("id", "n"))
-        agg.update(Seq((1L, 5L), (3L, 1L)).toDF("id", "n"))
-        val ag = agg.read().orderBy("id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        (st, ag)
-      } finally spark.conf.unset("spark.graft.merge.stageswap")
-    }
-    assert(run("true", "on") === run("false", "off"))
+    assert(residue("v") === Nil, "IncrementalAgg staging residue")
   }
 }

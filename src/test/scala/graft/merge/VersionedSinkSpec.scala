@@ -1,15 +1,29 @@
 package graft.merge
 
+import java.io.IOException
+import java.net.URI
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
+/** The local filesystem under its own `manifestfail` scheme, except that
+  * the rename committing version 2's manifest reports failure by returning
+  * false. */
+class ManifestRenameFailsFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("manifestfail:///")
+  override def getScheme: String = "manifestfail"
+  override def rename(src: Path, dst: Path): Boolean =
+    dst.getName != "v00002.manifest" && super.rename(src, dst)
+}
+
 /** VersionedSink behaviors the SQL gate (q136) can't see: per-version
   * equivalence to a from-scratch MergeSink, history immutability under
-  * later merges, orphan-dir crash recovery, and vacuum retention.
+  * later merges, orphan-dir crash recovery, vacuum retention, and I/O
+  * through the table's Hadoop filesystem.
   */
 class VersionedSinkSpec extends SparkSpec {
 
@@ -86,5 +100,43 @@ class VersionedSinkSpec extends SparkSpec {
     intercept[IllegalArgumentException](vs.read(2))
     // v1's data dir survives ONLY if a retained manifest still references it
     if (!Files.exists(Paths.get(s"$root/v/data/v=1"))) assert(dropped.contains(1))
+  }
+
+  private def keyed(ids: Seq[Long], ms: Long): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ids.map(i => (i, i * 10, "view", 1.0, ms)).toDF("user_id", "event_id", "event_type", "value", "ms")
+  }
+
+  test("a table on a non-default filesystem keeps its manifests beside its data") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.asidefail.impl", classOf[AsideRenameFailsFs].getName)
+    val table = "asidefail://" + tmpDir("vsink-scheme") + "/v"
+    val vs = new VersionedSink(spark, table, "user_id", Seq("ms", "event_id"), 4)
+    assert(vs.merge(keyed(0L until 20L, 1000)) === 1)
+    assert(vs.merge(keyed(0L until 10L, 2000)) === 2)
+    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(table, "_manifests/v00001.manifest")))
+    assert(fs.exists(new Path(table, "_manifests/v00002.manifest")))
+    assert(vs.currentVersion === 2)
+    assert(rows(vs.read(1)).map(_._1) === (0L until 20L).toSet)
+    assert(rows(vs.read()).count(_._1 < 10) === 10)
+    val current = rows(vs.read())
+    vs.vacuum(retain = 1)
+    assert(!fs.exists(new Path(table, "_manifests/v00001.manifest")))
+    assert(rows(vs.read()) === current)
+    intercept[IllegalArgumentException](vs.read(1))
+  }
+
+  test("a manifest rename that returns false fails the merge and commits nothing") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.manifestfail.impl", classOf[ManifestRenameFailsFs].getName)
+    val table = "manifestfail://" + tmpDir("vsink-renamefail") + "/v"
+    val vs = new VersionedSink(spark, table, "user_id", Seq("ms", "event_id"), 4)
+    assert(vs.merge(keyed(0L until 20L, 1000)) === 1)
+    val before = rows(vs.read())
+    intercept[IOException](vs.merge(keyed(0L until 10L, 2000)))
+    assert(vs.currentVersion === 1)
+    assert(rows(vs.read()) === before)
   }
 }
