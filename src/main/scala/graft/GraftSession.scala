@@ -54,6 +54,12 @@ object GraftSession {
     // own cores anyway and only add job scheduling; the bucket counts this
     // engine writes are at most 64, well under the bound
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    // local files through graft.util.LocalFs: the same files, modes and
+    // checksums as Hadoop's, but a mode is set by a syscall, not by forking
+    // a chmod process for every file, .crc sidecar and directory written
+    .config("spark.hadoop.fs.file.impl", classOf[graft.util.LocalFs].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.util.LocalAbstractFs].getName)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     // events.ts is ns-precision parquet; Spark only reads NANOS as long

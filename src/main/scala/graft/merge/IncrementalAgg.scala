@@ -26,9 +26,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the standard incremental-view contract).
   *
   * Layout is MergeSink's: hash-bucketed `__part=pmod(xxhash64(key), n)`
-  * directories, only the touched buckets rewritten and swapped in through
-  * [[MergeSink.rewriteBuckets]], bounded driver state (the touched-bucket id
-  * list).
+  * directories of one file each, only the touched buckets rewritten and
+  * swapped in through [[MergeSink.rewriteBuckets]], bounded driver state
+  * (the touched-bucket id list).
   */
 final class IncrementalAgg(
     spark: SparkSession,
@@ -36,7 +36,7 @@ final class IncrementalAgg(
     keyCol: String,
     combiners: Seq[(String, Column => Column)],
     numBuckets: Int = 64) {
-  import MergeSink.{PartCol, rewriteBuckets, touchedBuckets, withPart}
+  import MergeSink.{PartCol, byBucket, rewriteBuckets, touchedBuckets, withPart}
 
   /** Fold one batch of per-key PARTIALS (columns: key + every combiner
     * column) into the view. */
@@ -61,7 +61,7 @@ final class IncrementalAgg(
       if (tableFs.exists(tablePath))
         Some(spark.read.parquet(tableDir).filter(col(PartCol).isin(touched: _*)))
       else None
-    val all = existingOpt.map(_.unionByName(newPart)).getOrElse(newPart)
+    val all = byBucket(existingOpt.map(_.unionByName(newPart)).getOrElse(newPart), touched)
     val merged = all
       .groupBy(col(keyCol), col(PartCol))
       .agg(combiners.head._2(col(combiners.head._1)).as(combiners.head._1),

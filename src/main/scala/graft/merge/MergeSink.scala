@@ -83,7 +83,6 @@ final class MergeSink(
     * A filesystem call that reports failure aborts the merge with an
     * `IOException`; buckets not yet swapped keep their pre-merge rows. */
   def merge(batch: DataFrame): Unit = {
-    val spark = this.spark
     // the batch has two consumers (the touched-bucket probe and the merge
     // union) — persist so an expensive batch source (a parsed JSON
     // micro-batch, a computed change set) is evaluated once, not twice
@@ -102,17 +101,9 @@ final class MergeSink(
       // allowMissingColumns both ways: a batch may ADD a column (old rows
       // null-fill) or OMIT one the table already has (new rows null-fill) —
       // the lakehouse evolution contract, never a hard failure mid-stream.
-      // One task per bucket: hash-partitioned on the bucket column into at
-      // most as many partitions as touched buckets, so the per-key pick
-      // (grouped by key AND bucket, which this partitioning already
-      // satisfies) runs without another shuffle and writes each touched
-      // bucket as exactly one file.
-      val tasks = math.min(touched.length,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      val all = existingOpt
+      val all = byBucket(existingOpt
         .map(_.unionByName(newPart, allowMissingColumns = true))
-        .getOrElse(newPart)
-        .repartition(tasks, col(PartCol))
+        .getOrElse(newPart), touched)
       val merged = latestPerKey(all, keyCol, orderCols)
       val schema = nullable(StructType(
         merged.schema.filterNot(_.name == PartCol))).asInstanceOf[StructType]
@@ -205,6 +196,15 @@ object MergeSink {
   private[merge] def touchedBuckets(df: DataFrame): Seq[Long] =
     df.select(PartCol).distinct().collect().map(_.getLong(0)).toSeq
 
+  /** `df` (which carries [[PartCol]]) with one task per bucket:
+    * hash-partitioned on the bucket column into at most as many partitions
+    * as `touched` buckets, so a per-key step grouped by key AND bucket
+    * (which this partitioning already satisfies) runs without another
+    * shuffle and writes each touched bucket as exactly one file. */
+  private[merge] def byBucket(df: DataFrame, touched: Seq[Long]): DataFrame =
+    df.repartition(math.min(touched.length,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt), col(PartCol))
+
   /** Latest row per key of `all` (which carries [[PartCol]]): ordered by
     * `orderCols`, all descending, then by a content hash of the full row, so
     * the winner is a pure function of row content. One per-key `max_by`
@@ -293,16 +293,14 @@ object MergeSink {
   private def swapBuckets(fs: FileSystem, staging: Path, table: Path,
                           buckets: Seq[Long]): Unit = {
     val asideRoot = new Path(staging.toString + "__aside")
+    if (!fs.mkdirs(asideRoot)) throw new IOException(s"cannot create $asideRoot")
     for (p <- buckets) {
       val src = new Path(staging, s"$PartCol=$p")
       val dst = new Path(table, s"$PartCol=$p")
       if (fs.exists(src)) {
         val aside = new Path(asideRoot, s"$PartCol=$p")
         val moved = fs.exists(dst)
-        if (moved) {
-          if (!fs.mkdirs(asideRoot)) throw new IOException(s"cannot create $asideRoot")
-          rename(fs, dst, aside)
-        }
+        if (moved) rename(fs, dst, aside)
         if (!fs.rename(src, dst)) {
           if (moved) fs.rename(aside, dst)
           throw new IOException(s"rename $src -> $dst failed")

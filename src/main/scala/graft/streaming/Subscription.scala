@@ -1,9 +1,12 @@
 package graft.streaming
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.stream.Conform
 import graft.stream.Conform.SchemaMismatchException
@@ -140,32 +143,37 @@ object Subscription {
   /** Replay dead-lettered messages (after the sink schema is fixed): strip
     * the error/attempt metadata back to plain topic messages and run one
     * delivery attempt loop. Messages that fail AGAIN are re-dead-lettered
-    * with a fresh attempt count — replay is safe to repeat. Clears the DLQ
-    * dir on success-read so replays don't duplicate. */
+    * with a fresh attempt count — replay is safe to repeat.
+    *
+    * The DLQ dir is first renamed aside (a `__replay-<nanos>` sibling), so
+    * the redelivery's own failures land in a fresh DLQ, and an aside copy
+    * is deleted only once redelivery returns: a replay that dies midway
+    * leaves its messages aside, and the next replay redelivers them too
+    * (at least once, as any delivery). Returns the messages redelivered. */
   def replayDeadLetters(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       deadLetterDir: String,
       sub: Subscription,
       sinkDir: String,
       topicSchema: StructType,
       sinkSchema: () => StructType,
       sleep: Long => Unit = Thread.sleep): Long = {
-    val dir = new java.io.File(deadLetterDir)
-    if (!dir.exists()) return 0L
+    val dlq = new Path(deadLetterDir)
+    val fs = dlq.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dlq)) {
+      val aside = new Path(s"${deadLetterDir}__replay-${System.nanoTime()}")
+      if (!fs.rename(dlq, aside)) throw new IOException(s"rename $dlq -> $aside failed")
+    }
+    val asides = fs.globStatus(new Path(s"${deadLetterDir}__replay-*")).map(_.getPath)
+    if (asides.isEmpty) return 0L
     val dead = spark.read.schema(
         StructType(Topic.messageSchema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("error",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("delivery_attempts",
-            org.apache.spark.sql.types.LongType))))
-      .json(deadLetterDir)
+          StructField("error", StringType), StructField("delivery_attempts", LongType))))
+      .json(asides.map(_.toString).toSeq: _*)
     val n = dead.count()
-    if (n == 0) return 0L
-    val replay = dead.select("key", "value", "attributes")
-      // re-deliveries must go somewhere fresh if they fail again
-      .localCheckpoint(true)
-    graft.util.FsUtil.deleteRecursively(dir)
-    sub.deliverBatch(replay, sinkDir, topicSchema, sinkSchema, deadLetterDir, sleep)
+    if (n > 0) sub.deliverBatch(dead.select("key", "value", "attributes"), sinkDir,
+      topicSchema, sinkSchema, deadLetterDir, sleep)
+    asides.foreach(fs.delete(_, true))
     n
   }
 }

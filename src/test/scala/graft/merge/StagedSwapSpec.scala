@@ -22,8 +22,9 @@ class AsideRenameFailsFs extends RawLocalFileSystem {
   * share ([[MergeSink.rewriteBuckets]]): the new rows are written once to
   * a sibling staging directory and the touched bucket dirs rename into
   * place. These tests pin its physical contract — untouched buckets are
-  * never rewritten, each bucket is one file, no staging residue survives a
-  * merge, and a rename that reports failure aborts the swap. */
+  * never rewritten, each bucket is one file (in both sinks), no staging
+  * residue survives a merge, and a rename that reports failure aborts the
+  * swap. */
 class StagedSwapSpec extends SparkSpec {
 
   private def changes(rows: (Long, String, Long)*): DataFrame = {
@@ -67,6 +68,25 @@ class StagedSwapSpec extends SparkSpec {
       assert(before(b) === after(b), s"bucket $b was rewritten")
     }
     assert(after(touchedBuckets.head).size === 1, s"one file per bucket: $after")
+  }
+
+  test("an IncrementalAgg update writes each touched bucket as one file") {
+    val table = tmpDir("swap-agg-files") + "/v"
+    val agg = new IncrementalAgg(spark, table, "id",
+      Seq("n" -> (org.apache.spark.sql.functions.sum(_))), numBuckets = 4)
+    val s = spark
+    import s.implicits._
+    // AQE coalescing off, as in the MergeSink pin above
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try {
+      agg.update((1L to 40L).map(i => (i, i)).toDF("id", "n"))
+      agg.update((1L to 40L by 3).map(i => (i, 1L)).toDF("id", "n"))
+    } finally spark.conf.set(coalesce, "true")
+    val files = bucketFiles(table)
+    assert(files.size === 4 && files.values.forall(_.size == 1), s"one file per bucket: $files")
+    assert(agg.read().agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0) ===
+      (1L to 40L).sum + (1L to 40L by 3).size)
   }
 
   test("a rename that returns false aborts the swap and leaves the table as it was") {
