@@ -75,13 +75,7 @@ object Tables {
     * (SPARK-38388) and skips round-robin's sort-before-repartition. Apply
     * only where measured — a pure scan pays the exchange for nothing. */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val s = df.sparkSession
-    // defensive parse (r19 ADVICE): a malformed dial value means "default
-    // ON", never a query-build-time IllegalArgumentException
-    if (!s.conf.getOption("spark.graft.spread.enabled")
-        .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true)))
-      return df // measurement/ablation dial; default ON
-    val target = s.sparkContext.defaultParallelism
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target, key) else df
   }
 

@@ -1,10 +1,6 @@
 package graft.merge
 
-import java.io.IOException
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -14,27 +10,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * the sink table converges to the source (upsert), in contrast to the
   * append-only subscription sink.
   *
-  * Layout: the merged table is hash-partitioned into `numBuckets` key
-  * buckets, one `__part=pmod(xxhash64(key), n)` directory each, and each
-  * bucket directory holds exactly ONE parquet file. A merge reads back only
-  * the buckets its keys touch, writes their replacements to a sibling
-  * staging directory (each bucket by one task, as one file) and renames
-  * each into place — at 100 TB a micro-batch touching 0.1% of keys
-  * rewrites ~0.1% of the table, not all of it. Within a rewrite, the merge
-  * itself is one per-key `max_by` aggregate ([[MergeSink.latestPerKey]])
-  * picking the same winner as the `row_number` latest-wins window the
-  * batch-twin query q16 verifies against DuckDB.
-  *
-  * Schema: the table's evolved schema lives in [[MergeSink.SchemaFile]] at
-  * the table root (`_`-prefixed, so Spark's file listing skips it), and
-  * `merge`/`read` read the buckets with that schema instead of merging
-  * every parquet footer; a file lacking a column null-fills it. The stored
-  * schema is a SUPERSET of every footer in the table: it is replaced
-  * (staged, then renamed) BEFORE the first bucket carrying a new column
-  * swaps in, so no reader can meet a column the stored schema hides. A
-  * table without the file (written before it existed, or read in the
-  * instant the file is being replaced) falls back to a footer-merged
-  * `mergeSchema` read.
+  * The table is a [[BucketTable]] without history: `numBuckets` key buckets
+  * (`pmod(xxhash64(key), n)`), one parquet file each, committed by one
+  * manifest rename that also carries the table's evolved schema. A merge
+  * reads back only the buckets its keys touch and commits their
+  * replacements (each bucket written by one task, as one file) — at
+  * 100 TB a micro-batch touching 0.1% of keys rewrites ~0.1% of the
+  * table, not all of it. Within a rewrite, the merge itself is one
+  * per-key `max_by` aggregate ([[MergeSink.latestPerKey]]) picking the
+  * same winner as the `row_number` latest-wins window the batch-twin
+  * query q16 verifies against DuckDB. One writer per table.
   */
 final class MergeSink(
     spark: SparkSession,
@@ -45,32 +30,7 @@ final class MergeSink(
     tombstoneCol: Option[String] = None) {
   import MergeSink._
 
-  private val tablePath = new Path(tableDir)
-
-  // existence through the Hadoop FileSystem for tableDir's scheme:
-  // java.io.File is local-only and would report HDFS/S3 state absent
-  private def fileSystem: FileSystem =
-    tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def storedSchema(fs: FileSystem): Option[StructType] =
-    readSchema(fs, new Path(tablePath, SchemaFile))
-
-  /** The whole table, bucket column included: with the stored schema when
-    * there is one, else by merging every footer (mergeSchema: generations
-    * written before a column was added lack it — q257's contract). */
-  private def scan(stored: Option[StructType]): DataFrame = stored match {
-    case Some(schema) => spark.read.schema(schema).parquet(tableDir)
-    case None => spark.read.option("mergeSchema", "true").parquet(tableDir)
-  }
-
-  /** Replace the stored schema: staged under `staging`, then renamed in. */
-  private def storeSchema(fs: FileSystem, schema: StructType, staging: Path): Unit = {
-    val staged = new Path(staging, SchemaFile)
-    writeText(fs, staged, schema.json)
-    val live = new Path(tablePath, SchemaFile)
-    fs.delete(live, false)
-    rename(fs, staged, live)
-  }
+  private val table = new BucketTable(spark, tableDir, keepHistory = false)
 
   /** Merge one batch of change rows into the table: latest row per key wins,
     * ordering by `orderCols` (e.g. change timestamp, then a unique change id)
@@ -80,8 +40,7 @@ final class MergeSink(
     * partition layout. Idempotent AND deterministic: re-applying a batch, or
     * applying the same rows in any order, yields the identical table state.
     * (Two fully identical rows tie harmlessly: either one is the same row.)
-    * A filesystem call that reports failure aborts the merge with an
-    * `IOException`; buckets not yet swapped keep their pre-merge rows. */
+    * A merge that fails before its manifest rename commits nothing. */
   def merge(batch: DataFrame): Unit = {
     // the batch has two consumers (the touched-bucket probe and the merge
     // union) — persist so an expensive batch source (a parsed JSON
@@ -91,26 +50,13 @@ final class MergeSink(
     try {
       val touched = touchedBuckets(newPart)
       if (touched.isEmpty) return
-
-      val fs = fileSystem
-      val exists = fs.exists(tablePath)
-      val stored = if (exists) storedSchema(fs) else None
-      val existingOpt =
-        if (exists) Some(scan(stored).filter(col(PartCol).isin(touched: _*)))
-        else None
+      val cur = table.current
       // allowMissingColumns both ways: a batch may ADD a column (old rows
       // null-fill) or OMIT one the table already has (new rows null-fill) —
       // the lakehouse evolution contract, never a hard failure mid-stream.
-      val all = byBucket(existingOpt
-        .map(_.unionByName(newPart, allowMissingColumns = true))
-        .getOrElse(newPart), touched)
-      val merged = latestPerKey(all, keyCol, orderCols)
-      val schema = nullable(StructType(
-        merged.schema.filterNot(_.name == PartCol))).asInstanceOf[StructType]
-      // the schema goes first: every footer the swap brings in is then
-      // covered by it (the superset invariant)
-      rewriteBuckets(fs, tablePath, touched, merged, beforeSwap = staging =>
-        if (!stored.contains(schema)) storeSchema(fs, schema, staging))
+      val all = byBucket(cur.map(table.scan(_, touched)
+        .unionByName(newPart, allowMissingColumns = true)).getOrElse(newPart), touched)
+      table.commit(cur, touched, latestPerKey(all, keyCol, orderCols))
     } finally newPart.unpersist(blocking = false)
   }
 
@@ -127,39 +73,24 @@ final class MergeSink(
     * column is NULL (a feed that only stamps deletes, a schema-evolved
     * union) — live rows silently hidden. `<=>` keeps them. */
   def read(): DataFrame = {
-    val t = scan(storedSchema(fileSystem)).drop(PartCol)
+    val t = table.read()
     tombstoneCol.map(c => t.filter(!(col(c) <=> "true"))).getOrElse(t)
   }
 
   /** Physically drop tombstone rows — the compaction horizon decision.
-    * Full-table rewrite (run rarely, like any compaction): after a purge,
-    * a replay of a PRE-delete change would resurrect its key, so purge
-    * only once the upstream replay window has passed. No-op without a
-    * configured `tombstoneCol`, and no-op before the table exists (mirrors
-    * merge()'s existence check). NULL-safe like read(): only explicit
-    * `"true"` tombstones are purged. If EVERY row is a tombstone, the
-    * overwrite is skipped — writing an empty partitioned dataset would
-    * leave a directory with no part files, bricking read()/merge() with
-    * 'unable to infer schema'; an all-tombstone table simply keeps its
-    * tombstones until fresh live rows arrive. */
+    * Full-table rewrite (run rarely, like any compaction), as one commit of
+    * every bucket: after a purge, a replay of a PRE-delete change would
+    * resurrect its key, so purge only once the upstream replay window has
+    * passed. No-op without a configured `tombstoneCol` or before the table
+    * exists. NULL-safe like read(): only explicit `"true"` tombstones are
+    * purged. A bucket left without rows leaves the table; the manifest
+    * keeps the schema, so even an all-tombstone table purges to an empty,
+    * readable one. */
   def purgeTombstones(): Unit = tombstoneCol.foreach { c =>
-    val fs = fileSystem
-    if (fs.exists(tablePath)) {
-      val stored = storedSchema(fs)
-      val live = scan(stored)
-        .filter(!(col(c) <=> "true")).localCheckpoint(true)
-      if (!live.isEmpty) {
-        // one file per bucket, as merge() writes them
-        live.repartition(numBuckets, col(PartCol)).write.partitionBy(PartCol)
-          .mode(SaveMode.Overwrite).parquet(tableDir)
-        // the overwrite replaced the whole directory, schema file included;
-        // every new footer carries the full stored schema, so until the
-        // file is back the fallback read sees the same columns
-        stored.foreach { schema =>
-          val staging = stagingPath(tablePath)
-          try storeSchema(fs, schema, staging) finally fs.delete(staging, true)
-        }
-      }
+    table.current.foreach { m =>
+      // one file per bucket, as merge() writes them
+      table.commit(Some(m), m.buckets.keys, table.scan(m, m.buckets.keys)
+        .filter(!(col(c) <=> "true")).repartition(numBuckets, col(PartCol)))
     }
   }
 
@@ -181,9 +112,6 @@ final class MergeSink(
 }
 
 object MergeSink {
-  /** The stored table schema, at the table root. */
-  val SchemaFile = "_graft_schema.json"
-
   /** The bucket column of every merge-layer table. */
   private[merge] val PartCol = "__part"
 
@@ -226,88 +154,6 @@ object MergeSink {
     all.groupBy(col(keyCol), col(PartCol))
       .agg(max_by(struct(all.columns.map(col): _*), ordKey).as("__w"))
       .select(col("__w.*"))
-  }
-
-  /** A sibling of `table` for one rewrite's staged output. The nonce keeps
-    * two concurrent rewrites from overwriting each other's staged output
-    * mid-swap. */
-  private def stagingPath(table: Path): Path =
-    new Path(table.toString + s"__staging-${java.lang.System.nanoTime()}")
-
-  /** Replace the `buckets` of `table` with `rows` (partitioned by
-    * [[PartCol]]): `rows` are computed exactly once, straight to a staging
-    * dir (the table is also a read source of their plan, so it cannot be
-    * the write target), then `beforeSwap` runs on the staging dir and each
-    * bucket swaps in by [[swapBuckets]]. The staging dir is deleted either
-    * way. */
-  private[merge] def rewriteBuckets(fs: FileSystem, table: Path, buckets: Seq[Long],
-                                    rows: DataFrame,
-                                    beforeSwap: Path => Unit = _ => ()): Unit = {
-    val staging = stagingPath(table)
-    try {
-      rows.write.partitionBy(PartCol).mode(SaveMode.Overwrite).parquet(staging.toString)
-      if (!fs.exists(table) && !fs.mkdirs(table))
-        throw new IOException(s"cannot create $table")
-      beforeSwap(staging)
-      swapBuckets(fs, staging, table, buckets)
-    } finally fs.delete(staging, true)
-  }
-
-  private[merge] def writeText(fs: FileSystem, file: Path, text: String): Unit = {
-    val out = fs.create(file, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private[merge] def readText(fs: FileSystem, file: Path): String = {
-    val in = fs.open(file)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-  }
-
-  private def readSchema(fs: FileSystem, file: Path): Option[StructType] =
-    try Some(DataType.fromJson(readText(fs, file)).asInstanceOf[StructType])
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** Every field nullable, as a parquet write stores it. */
-  private def nullable(dt: DataType): DataType = dt match {
-    case s: StructType =>
-      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
-
-  /** `FileSystem.rename` reports most failures by returning false. */
-  private[merge] def rename(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst)) throw new IOException(s"rename $src -> $dst failed")
-
-  /** Swap each staged `__part=p` bucket dir into `table`, RECOVERABLY
-    * (r19 ADVICE): a live bucket is only touched when its staged
-    * replacement exists (a touched bucket can be absent from a
-    * non-deterministic batch plan evaluated twice — it must then be LEFT
-    * ALONE, not deleted), and it moves ASIDE (outside the table, invisible
-    * to readers) rather than being deleted before the rename — a crash
-    * between the two renames leaves both the staged and the aside copy on
-    * disk. A rename that reports failure throws: going on would rename
-    * the staged bucket INTO a live one that failed to move aside, nesting
-    * `p/p`; a failed rename-in puts the aside copy back first. */
-  private def swapBuckets(fs: FileSystem, staging: Path, table: Path,
-                          buckets: Seq[Long]): Unit = {
-    val asideRoot = new Path(staging.toString + "__aside")
-    if (!fs.mkdirs(asideRoot)) throw new IOException(s"cannot create $asideRoot")
-    for (p <- buckets) {
-      val src = new Path(staging, s"$PartCol=$p")
-      val dst = new Path(table, s"$PartCol=$p")
-      if (fs.exists(src)) {
-        val aside = new Path(asideRoot, s"$PartCol=$p")
-        val moved = fs.exists(dst)
-        if (moved) rename(fs, dst, aside)
-        if (!fs.rename(src, dst)) {
-          if (moved) fs.rename(aside, dst)
-          throw new IOException(s"rename $src -> $dst failed")
-        }
-      }
-    }
-    fs.delete(asideRoot, true)
   }
 
   /** Map-typed columns are unhashable (undefined iteration order). */

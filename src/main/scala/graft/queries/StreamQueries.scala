@@ -641,7 +641,7 @@ object StreamQueries {
     * last event. Exported state = latest event per surviving user — the
     * deleted seventh is gone, everyone else unaffected.
     *
-    * Scale shape: identical to q34 (touched-bucket dynamic overwrite,
+    * Scale shape: identical to q34 (touched-bucket rewrites,
     * change-volume cost); the tombstone filter is a partition-local
     * predicate on read. */
   def q147CdcDeleteMerge(s: SparkSession, dir: String): DataFrame = {
@@ -702,8 +702,8 @@ object StreamQueries {
     * here — stated, not silently absent (the delete path lives in the CDC
     * `__deleted` rewrite, O4).
     *
-    * Scale shape: both version reads are manifest-pinned partition-pruned
-    * unions (the q136 machinery); the diff is ONE full-outer join on the
+    * Scale shape: each version read is one scan of the bucket dirs its
+    * manifest pins (the q136 machinery); the diff is ONE full-outer join on the
     * bucket key both sides are already bucketed by, then a row-level
     * payload comparison — no window, no second shuffle. Diff cardinality
     * is change volume between the versions, not table size. */
@@ -1672,7 +1672,7 @@ object StreamQueries {
     * leg of the evolution triad: q155 proves the file layer, q128 the
     * wire; this proves the UPSERT sink): wave 1 merges the base shape,
     * wave 2 merges rows that ADD a `segment` column (old generations
-    * null-fill through the footer-merged read), and wave 3 merges a
+    * null-fill through the manifest-schema read), and wave 3 merges a
     * correction batch that OMITS it (new rows null-fill through the
     * two-way `unionByName(allowMissingColumns)`) — the add-column and
     * drop-column directions of the lakehouse evolution contract, under
@@ -1683,7 +1683,7 @@ object StreamQueries {
     * oracle can state each user's final row in closed form.
     *
     * Scale shape: identical to q34 (touched-bucket rewrites); the
-    * footer-merge costs per-file planning only on touched buckets. */
+    * evolved schema rides the manifest, so no read merges footers. */
   def q257MergeEvolve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val root = graft.util.HarnessDirs.newDir("q257")

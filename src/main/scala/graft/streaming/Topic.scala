@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -108,10 +107,18 @@ final class Topic(val spark: SparkSession, val name: String, val dir: String,
     reader.json(dir)
   }
 
+  /** The topic dir and the Hadoop `FileSystem` of its scheme: a local
+    * `java.nio` path would miss a topic given as a URI. */
+  private def root: (FileSystem, Path) = {
+    val p = new Path(dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
   /** Batch read of the whole retained log (inspection surface). */
   def read: DataFrame = {
+    val (fs, p) = root
     // an un-published-to topic has no files; model as empty log, not error
-    if (!Files.exists(Paths.get(dir))) {
+    if (!fs.exists(p)) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], messageSchema)
     } else spark.read.schema(messageSchema).json(dir)
   }
@@ -124,19 +131,13 @@ final class Topic(val spark: SparkSession, val name: String, val dir: String,
     * `retentionSeconds` — wall-clock pruning, the file-log analog of
     * `message_retention_duration` (`/root/reference/terraform/main.tf:379,401`). */
   def pruneRetention(retentionSeconds: Long, nowMs: Long = System.currentTimeMillis()): Int = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return 0
+    val (fs, p) = root
+    if (!fs.exists(p)) return 0
     val cutoff = nowMs - retentionSeconds * 1000L
-    val it = Files.list(root).iterator()
-    var pruned = 0
-    while (it.hasNext) {
-      val p = it.next()
-      val fn = p.getFileName.toString
-      if (fn.endsWith(".json") && Files.getLastModifiedTime(p).toMillis < cutoff) {
-        Files.delete(p); pruned += 1
-      }
+    fs.listStatus(p).count { st =>
+      st.getPath.getName.endsWith(".json") && st.getModificationTime < cutoff &&
+        fs.delete(st.getPath, false)
     }
-    pruned
   }
 }
 

@@ -84,15 +84,13 @@ class IncrementalAggSpec extends SparkSpec {
     val root = tmpDir("ia-touch")
     val view = newView(root)
     view.update(partials(ev))
-    val before = new java.io.File(s"$root/t").listFiles()
-      .filter(_.getName.startsWith("__part=")).map(f => f.getName -> f.lastModified()).toMap
+    val before = StagedSwapSpec.bucketFiles(s"$root/t")
 
     val oneUser = ev.limit(1).select($"user_id").head().getLong(0)
     view.update(partials(ev.filter($"user_id" === oneUser)))
-    val after = new java.io.File(s"$root/t").listFiles()
-      .filter(_.getName.startsWith("__part=")).map(f => f.getName -> f.lastModified()).toMap
+    val after = StagedSwapSpec.bucketFiles(s"$root/t")
 
-    val touched = after.count { case (name, m) => before(name) != m }
+    val touched = after.count { case (name, files) => before(name) != files }
     assert(touched === 1, s"expected exactly one rewritten bucket, got $touched")
     // and the fold is additive: that user's count doubled
     val n = view.read().filter($"user_id" === oneUser).head().getAs[Long]("n")

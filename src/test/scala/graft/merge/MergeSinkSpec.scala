@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
@@ -260,13 +259,9 @@ class MergeSinkSpec extends SparkSpec {
     val s1 = tiers(sink)
     assert(s1 === Seq((1L, "a1", None), (2L, "b2", Some("gold")),
       (3L, "c1", Some("silver"))))
-    // a fresh sink on the directory reads the same through the stored
-    // schema, and so does the footer-merged fallback once it is gone
+    // a fresh sink on the directory reads the same through the manifest's
+    // schema
     assert(tiers(new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 4)) === s1)
-    val schemaFile = new Path(dir, MergeSink.SchemaFile)
-    val fs = schemaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(schemaFile, false))
-    assert(tiers(sink) === s1)
     // OMIT the column: the new winner's tier is NULL, not a failure and
     // not a stale carry-over
     sink.merge(changes((3L, "c2", 30L)))

@@ -10,20 +10,33 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The local filesystem under its own `manifestfail` scheme, except that
-  * the rename committing version 2's manifest reports failure by returning
-  * false. */
+/** The local filesystem under its own `manifestfail` scheme, with the
+  * commit of version 2 failing as [[ManifestRenameFailsFs.fault]] says:
+  * `"false"`, its manifest rename reports failure by returning false;
+  * `"throw"`, the call dies just before that rename, after the data
+  * write. Unarmed (`""`), it is the plain local filesystem. */
 class ManifestRenameFailsFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("manifestfail:///")
   override def getScheme: String = "manifestfail"
   override def rename(src: Path, dst: Path): Boolean =
-    dst.getName != "v00002.manifest" && super.rename(src, dst)
+    if (dst.getName != "v00002.manifest") super.rename(src, dst)
+    else ManifestRenameFailsFs.fault match {
+      case "false" => false
+      case "throw" => throw new IOException("injected failure before the manifest rename")
+      case _ => super.rename(src, dst)
+    }
+}
+
+object ManifestRenameFailsFs {
+  @volatile var fault = ""
 }
 
 /** VersionedSink behaviors the SQL gate (q136) can't see: per-version
   * equivalence to a from-scratch MergeSink, history immutability under
   * later merges, orphan-dir crash recovery, vacuum retention, and I/O
-  * through the table's Hadoop filesystem.
+  * through the table's Hadoop filesystem. The commit-fault tests run over
+  * all three sinks of the shared [[BucketTable]] commit: MergeSink,
+  * IncrementalAgg and VersionedSink.
   */
 class VersionedSinkSpec extends SparkSpec {
 
@@ -62,7 +75,7 @@ class VersionedSinkSpec extends SparkSpec {
 
     // simulate a crash AFTER data write, BEFORE manifest commit: an orphan
     // v=2 data dir exists with garbage; the real merge must overwrite it
-    val orphan = Paths.get(s"$root/v/data/v=2/__part=0")
+    val orphan = Paths.get(s"$root/v/data/__v=2/__part=0")
     Files.createDirectories(orphan)
     Files.write(orphan.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
     assert(vs.currentVersion == 1) // no manifest -> not committed
@@ -99,7 +112,7 @@ class VersionedSinkSpec extends SparkSpec {
     assert(rows(vs.read(3)).nonEmpty) // retained window still reads
     intercept[IllegalArgumentException](vs.read(2))
     // v1's data dir survives ONLY if a retained manifest still references it
-    if (!Files.exists(Paths.get(s"$root/v/data/v=1"))) assert(dropped.contains(1))
+    if (!Files.exists(Paths.get(s"$root/v/data/__v=1"))) assert(dropped.contains(1))
   }
 
   private def keyed(ids: Seq[Long], ms: Long): DataFrame = {
@@ -110,8 +123,8 @@ class VersionedSinkSpec extends SparkSpec {
 
   test("a table on a non-default filesystem keeps its manifests beside its data") {
     spark.sparkContext.hadoopConfiguration
-      .set("fs.asidefail.impl", classOf[AsideRenameFailsFs].getName)
-    val table = "asidefail://" + tmpDir("vsink-scheme") + "/v"
+      .set("fs.manifestfail.impl", classOf[ManifestRenameFailsFs].getName)
+    val table = "manifestfail://" + tmpDir("vsink-scheme") + "/v"
     val vs = new VersionedSink(spark, table, "user_id", Seq("ms", "event_id"), 4)
     assert(vs.merge(keyed(0L until 20L, 1000)) === 1)
     assert(vs.merge(keyed(0L until 10L, 2000)) === 2)
@@ -128,15 +141,55 @@ class VersionedSinkSpec extends SparkSpec {
     intercept[IllegalArgumentException](vs.read(1))
   }
 
+  /** The three bucketed tables under `root`: name, table dir, a write of
+    * one batch, and a read. */
+  private def sinks(root: String): Seq[(String, String, DataFrame => Unit, () => DataFrame)] = {
+    val order = Seq("ms", "event_id")
+    val ms = new MergeSink(spark, s"$root/merge", "user_id", order, 4)
+    val ia = new IncrementalAgg(spark, s"$root/agg", "user_id", Seq("value" -> (sum(_))), 4)
+    val vs = new VersionedSink(spark, s"$root/versioned", "user_id", order, 4)
+    Seq(("MergeSink", s"$root/merge", ms.merge _, ms.read _),
+      ("IncrementalAgg", s"$root/agg", (b: DataFrame) => ia.update(b.select("user_id", "value")),
+        ia.read _),
+      ("VersionedSink", s"$root/versioned", (b: DataFrame) => { vs.merge(b); () },
+        () => vs.read()))
+  }
+
+  /** For each sink: commit version 1, fail version 2's commit by `fault`,
+    * check the table is unchanged, then retry the same batch and check it
+    * committed exactly once (against a fault-free twin) and that no
+    * uncommitted version dir is left. */
+  private def commitFaultTable(fault: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.manifestfail.impl", classOf[ManifestRenameFailsFs].getName)
+    def state(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val b1 = keyed(0L until 20L, 1000)
+    val b2 = keyed(0L until 10L, 2000)
+    val faulty = sinks("manifestfail://" + tmpDir(s"commit-$fault"))
+    val twins = sinks(tmpDir(s"commit-$fault-twin"))
+    for (((name, dir, write, read), (_, _, twinWrite, twinRead)) <- faulty.zip(twins)) {
+      write(b1)
+      val before = state(read())
+      ManifestRenameFailsFs.fault = fault
+      try intercept[IOException](write(b2)) finally ManifestRenameFailsFs.fault = ""
+      assert(state(read()) === before, s"$name: the failed commit changed the table")
+      write(b2)
+      Seq(b1, b2).foreach(twinWrite)
+      assert(state(read()) === state(twinRead()), s"$name: the retry did not commit once")
+      val fs = new Path(dir).getFileSystem(conf)
+      val versions = fs.listStatus(new Path(dir, "data")).map(_.getPath.getName)
+      assert(versions.toSet.subsetOf(Set("__v=1", "__v=2")), s"$name: ${versions.toSeq}")
+      assert(fs.listStatus(new Path(dir, "_manifests")).map(_.getPath.getName).toSet ===
+        (if (name == "VersionedSink") Set("v00001.manifest", "v00002.manifest")
+         else Set("v00002.manifest")), s"$name: manifests")
+    }
+  }
+
   test("a manifest rename that returns false fails the merge and commits nothing") {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.manifestfail.impl", classOf[ManifestRenameFailsFs].getName)
-    val table = "manifestfail://" + tmpDir("vsink-renamefail") + "/v"
-    val vs = new VersionedSink(spark, table, "user_id", Seq("ms", "event_id"), 4)
-    assert(vs.merge(keyed(0L until 20L, 1000)) === 1)
-    val before = rows(vs.read())
-    intercept[IOException](vs.merge(keyed(0L until 10L, 2000)))
-    assert(vs.currentVersion === 1)
-    assert(rows(vs.read()) === before)
+    commitFaultTable("false")
+  }
+
+  test("a failure between the data write and the manifest rename commits nothing; a retry commits once") {
+    commitFaultTable("throw")
   }
 }

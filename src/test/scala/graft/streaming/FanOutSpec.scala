@@ -192,4 +192,19 @@ class FanOutSpec extends SparkSpec {
     assert(attrs("googclient_schemarevisionid") === rev.revisionId)
     assert(topic.pull(10).length === 2)
   }
+
+  test("a topic dir given as a file: URI reads and prunes its log") {
+    val registry = new SchemaRegistry
+    val topic = new Topic(spark, "t", "file://" + tmpDir("uri-topic") + "/topic",
+      registry.register("t", Fixtures.topicSchema))
+    val s = spark
+    import s.implicits._
+    topic.publish(Seq(
+      ("""{"id":1}""", """{"id":1,"first_name":"A","last_name":"x","email":"a@x","zipcode":1,"city":"c","country":"u","__deleted":"false"}"""),
+      ("""{"id":2}""", """{"id":2,"first_name":"B","last_name":"x","email":"b@x","zipcode":2,"city":"c","country":"u","__deleted":"false"}"""))
+      .toDF("key", "value"))
+    assert(topic.read.count() === 2)
+    assert(topic.pruneRetention(retentionSeconds = 0, nowMs = System.currentTimeMillis() + 10000) > 0)
+    assert(topic.read.count() === 0)
+  }
 }

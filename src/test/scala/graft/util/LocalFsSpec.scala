@@ -128,6 +128,6 @@ class LocalFsSpec extends SparkSpec {
       assert(CountingRawLocalFs.calls.get - calls >= 2 * 64, "the merge wrote through the counting fs")
       assert(CountingRawLocalFs.fallbacks.get === fallbacks)
     }
-    assert(new java.io.File(table).list().count(_.startsWith("__part=")) === 64)
+    assert(graft.merge.StagedSwapSpec.bucketFiles(table).size === 64)
   }
 }
