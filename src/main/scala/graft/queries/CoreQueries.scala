@@ -1632,7 +1632,8 @@ object CoreQueries {
     import s.implicits._
     // The two edge-scale pins (e: ~E rows; o: exactly E rows) go to local
     // PARQUET, not the block-manager cache. At ×100 these are ~120M-row
-    // relations, and the ×100 stage profile (TriangleProfile) showed the
+    // relations, and the ×100 stage profile (SCALE.md, "q144_triangles
+    // ×100 headroom found — columnar pins") showed the
     // alternatives losing both ways: the default deserialized
     // MEMORY_AND_DISK pin kept 2×120M UnsafeRows heap-resident for the
     // whole query (740 of the rep's 802 GC-seconds charged to the two
@@ -4256,47 +4257,27 @@ object CoreQueries {
       .withColumn("bucket", greatest(lit(0L), least(lit(nb - 1L),
         floor(($"v" + $"vmax") / ($"vmax" * 2 + 1e-9) * nb).cast("long"))))
       .select($"rf", $"slope_e6", $"bucket")
+    // two passes over the regenerated slopes: the tiny (rf, bucket) count
+    // relation and its running-sum window locate the bucket holding rank
+    // t, then only that bucket's rows meet the row_number sort. The
+    // one-pass alternative (one groupBy collecting each bucket's sorted
+    // slope array, element_at on the rank-t bucket) generates the slopes
+    // once but read 1.28× slower at sf0.1 on 4 cores in same-JVM pairs
+    // (CHANGES.md), so the second generation is the cheaper plan.
     val wB = Window.partitionBy($"rf").orderBy($"bucket")
-    // ONE-PASS selection (r20, default ON; A/B dial keeps the r19 two-pass
-    // leg): the r19 verdict asked for a single slope generation — here one
-    // groupBy(rf, bucket) collects BOTH the bucket count and the bucket's
-    // sorted values (collect_list partials combine map-side, so the
-    // exchange carries each slope exactly once, grouped), the running-sum
-    // window over the tiny (rf, bucket) relation locates the rank-t
-    // bucket, and element_at picks the median from the already-sorted
-    // array — no second 9.4M-row regeneration, no per-bucket sort job.
-    // Memory is bounded at ANY corpus scale: the pair table is
-    // calendar-bounded (|days|²/2 per flag), so a bucket's array is
-    // ≤ ~n/1024 longs by the signed-log spread.
-    val onePass = s.conf
-      .getOption("spark.graft.theilsen.onepass").forall(_.toBoolean)
-    if (onePass) {
-      b.groupBy($"rf", $"bucket")
-        .agg(count(lit(1)).as("bn"),
-          sort_array(collect_list($"slope_e6")).as("vals"))
-        .withColumn("nBefore", coalesce(sum($"bn").over(
-          wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .join(broadcast(ext.select($"rf", $"cnt")), "rf")
-        .withColumn("t", expr("(cnt + 1) div 2"))
-        .filter($"nBefore" < $"t" && $"t" <= $"nBefore" + $"bn")
-        .select($"rf", $"cnt".as("n_pairs"),
-          element_at($"vals", ($"t" - $"nBefore").cast("int")).as("slope_med_e6"))
-        .orderBy($"rf")
-    } else {
-      val tgt = b.groupBy($"rf", $"bucket").agg(count(lit(1)).as("bn"))
-        .withColumn("nBefore", coalesce(sum($"bn").over(
-          wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .join(broadcast(ext.select($"rf", $"cnt")), "rf")
-        .withColumn("t", expr("(cnt + 1) div 2"))
-        .filter($"nBefore" < $"t" && $"t" <= $"nBefore" + $"bn")
-        .select($"rf", $"bucket", $"nBefore", $"t", $"cnt")
-      val wIn = Window.partitionBy($"rf", $"bucket").orderBy($"slope_e6")
-      b.join(broadcast(tgt), Seq("rf", "bucket"))
-        .withColumn("rn", row_number().over(wIn))
-        .filter($"nBefore" + $"rn" === $"t")
-        .select($"rf", $"cnt".as("n_pairs"), $"slope_e6".as("slope_med_e6"))
-        .orderBy($"rf")
-    }
+    val tgt = b.groupBy($"rf", $"bucket").agg(count(lit(1)).as("bn"))
+      .withColumn("nBefore", coalesce(sum($"bn").over(
+        wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .join(broadcast(ext.select($"rf", $"cnt")), "rf")
+      .withColumn("t", expr("(cnt + 1) div 2"))
+      .filter($"nBefore" < $"t" && $"t" <= $"nBefore" + $"bn")
+      .select($"rf", $"bucket", $"nBefore", $"t", $"cnt")
+    val wIn = Window.partitionBy($"rf", $"bucket").orderBy($"slope_e6")
+    b.join(broadcast(tgt), Seq("rf", "bucket"))
+      .withColumn("rn", row_number().over(wIn))
+      .filter($"nBefore" + $"rn" === $"t")
+      .select($"rf", $"cnt".as("n_pairs"), $"slope_e6".as("slope_med_e6"))
+      .orderBy($"rf")
   }
 
   /** q245 oracle: identical daily fold, slope grid, and lower-median
@@ -4708,9 +4689,9 @@ object CoreQueries {
     * `customer` carrying a running e2-grid balance sum, hash-matched
     * level by level against DuckDB executing the declarative
     * WITH RECURSIVE chain. The ENGINE side executes the same recurrence
-    * level-synchronously in batches of `spark.graft.recursion.batchLevels`
-    * (default 12) levels per Spark job: the r18 plan audit measured the
-    * native one-job-per-level execution at 16.8 s of pure job-launch
+    * level-synchronously in batches of 12 levels per Spark job: the r18
+    * plan audit measured the native one-job-per-level execution at
+    * 16.8 s of pure job-launch
     * overhead (120 × ~0.14 s; ×100 corpus moved it only 1.9×), and
     * batching cut it to ~1.7 s with byte-identical output. The native
     * machinery's conformance — the DEFAULT depth cap
@@ -4724,7 +4705,13 @@ object CoreQueries {
     * corpus-bound; the production form for million-level chains is q172's
     * level-synchronous checkpointed BFS (bounded lineage), exactly as
     * q265's scaladoc divides the labor. */
-  def q269DeepRecursion(s: SparkSession, dir: String): DataFrame = {
+  def q269DeepRecursion(s: SparkSession, dir: String): DataFrame =
+    q269DeepRecursion(s, dir, batchK = 12)
+
+  /** q269 at an explicit batch size: RecursionEnvelopeSpec runs it at
+    * K = 1, 12 and 500 to pin the output as batch-size-invariant. */
+  private[graft] def q269DeepRecursion(s: SparkSession, dir: String,
+      batchK: Int): DataFrame = {
     // Level-SYNCHRONOUS execution, BATCHED: the recurrence (a running path
     // sum along the key-successor chain) is computed K levels per Spark
     // job instead of one — the r18 plan audit measured the native
@@ -4743,9 +4730,7 @@ object CoreQueries {
     // raised-cap completion, row cap, cycle behavior) stays pinned by
     // q265 and RecursionEnvelopeSpec — this entry gates the DEPTH axis
     // and its latency ∝ depth/batchK story.
-    val batchK = s.conf.getOption("spark.graft.recursion.batchLevels")
-      .map(_.toInt).getOrElse(12)
-    require(batchK >= 1, s"batchLevels must be >= 1, got $batchK")
+    require(batchK >= 1, s"batchK must be >= 1, got $batchK")
     val maxDepth = 120
     val cust = Tables.customer(s, dir)
       .select(col("c_custkey").as("k"),
@@ -4889,7 +4874,7 @@ object CoreQueries {
     "q260_sql_udf" -> (q260SqlUdf _),
     "q268_array_conformance" -> (q268ArrayConformance _),
     "q265_recursive_cte" -> (q265RecursiveCte _),
-    "q269_deep_recursion" -> (q269DeepRecursion _),
+    "q269_deep_recursion" -> (q269DeepRecursion(_: SparkSession, _: String)),
     "q259_explode_outer" -> (q259ExplodeOuter _),
     "q255_csv_malformed" -> (q255CsvMalformed _),
     "q250_partition_expiry" -> (q250PartitionExpiry _),

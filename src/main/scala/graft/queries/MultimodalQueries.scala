@@ -335,8 +335,8 @@ object MultimodalQueries {
   }
 
   /** The q127 near-dup at an EXPLICIT band width, for callers that fix the
-    * geometry (tools/ImageNearDupWiden's A/B measurement; the spec's
-    * recall invariants). Same guard and single-hash-pass shape as the auto
+    * geometry (the spec's recall invariants; the 32-bit widening's
+    * measurement is in IMAGENEARDUP_WIDEN_r17.json). Same guard and single-hash-pass shape as the auto
     * path; on trip the remedy names the next-wider geometry, or the
     * verdict shape when already at maximum width. */
   def imageNearDup(s: SparkSession, dir: String, bandBits: Int): DataFrame = {

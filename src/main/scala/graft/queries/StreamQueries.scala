@@ -1509,8 +1509,9 @@ object StreamQueries {
     // watermark between drains — the persistence contract this gate
     // certifies); the B→flush boundary is an in-query micro-batch
     // boundary (maxFilesPerTrigger=1 + pinned mtimes, the q244 recipe —
-    // the watermark advances between batches of one run), which r19's
-    // StreamDecompose measured as the cheap end of the same semantics:
+    // the watermark advances between batches of one run), which the r19
+    // streaming-gate decomposition (SCALE.md, OPTIMIZATION_r19.md)
+    // measured as the cheap end of the same semantics:
     // three single-batch query starts paid ~2.1 s of harness around
     // ~5.4 s of batch work, and the third start bought nothing a second
     // batch of the second start doesn't.
@@ -1653,9 +1654,10 @@ object StreamQueries {
     // wave 0 drains alone, then a checkpointed RESTART picks up waves 1+2
     // as two mtime-ordered micro-batches of ONE query: the restart
     // boundary the entry certifies survives with half the r18 query-start
-    // overhead (the r19 StreamDecompose split showed 3 starts paying
-    // ~9 s of harness around 12 s of merge work; micro-batch boundaries
-    // are the q244 recipe and merge-per-batch is unchanged)
+    // overhead (the r19 streaming-gate decomposition in SCALE.md showed
+    // 3 starts paying ~9 s of harness around 12 s of merge work;
+    // micro-batch boundaries are the q244 recipe and merge-per-batch is
+    // unchanged)
     publishWave(0)
     drain()
     publishWave(1)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Maintenance for append sinks: micro-batch delivery produces one-file-
@@ -32,11 +32,10 @@ object SinkMaintenance {
 
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): CompactionStats = {
-    recoverSwap(dir) // finish any swap a previous crash interrupted
-    val root = new File(dir)
-    val parts = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-    val totalBytes = parts.map(_.length()).sum
+    val (fs, root) = resolve(spark, dir)
+    recoverSwap(spark, dir) // finish any swap a previous crash interrupted
+    val parts = partFiles(fs, root)
+    val totalBytes = parts.map(_.getLen).sum
     val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (parts.length <= targetFiles)
       return CompactionStats(parts.length, parts.length,
@@ -49,8 +48,7 @@ object SinkMaintenance {
     val after = spark.read.parquet(tmp).count()
     require(after == before, s"compaction row mismatch: $before -> $after; sink untouched")
 
-    val newParts = Option(new File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
+    val newParts = partFiles(fs, new Path(tmp))
 
     // Crash-safe swap: write a manifest FIRST, then move the compacted
     // files in (their job-UUID names cannot collide with the old ones),
@@ -60,22 +58,25 @@ object SinkMaintenance {
     // the sink is never left empty (the pre-fix ordering deleted the old
     // files before moving the new ones in, losing the sink if the process
     // died between the two steps).
-    val manifest = Paths.get(dir, SwapManifest)
+    val manifest = new Path(root, SwapManifest)
     val lines = Seq(s"TMP $tmp") ++
-      newParts.map(f => s"NEW ${f.getName}") ++ parts.map(f => s"OLD ${f.getName}")
+      newParts.map(f => s"NEW ${f.getPath.getName}") ++
+      parts.map(f => s"OLD ${f.getPath.getName}")
     // write-then-rename: the manifest appears ATOMICALLY complete or not at
     // all — a crash mid-write must not leave a truncated step list for
     // recovery to half-apply
-    val staging = Paths.get(dir, SwapManifest + ".tmp")
-    Files.writeString(staging, lines.mkString("\n"))
-    Files.move(staging, manifest, StandardCopyOption.ATOMIC_MOVE)
+    val staging = new Path(root, SwapManifest + ".tmp")
+    val out = fs.create(staging, true)
+    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    require(fs.rename(staging, manifest), s"could not commit swap manifest $manifest")
 
-    // moveIfPresent, not a bare move: a concurrent [[read]] that saw the
+    // moveIfPresent, not a bare rename: a concurrent [[read]] that saw the
     // manifest may be completing these very steps (see recoverSwap)
-    newParts.foreach(f => moveIfPresent(f.toPath, Paths.get(dir, f.getName)))
-    parts.foreach(_.delete())
-    Files.deleteIfExists(manifest)
-    graft.util.FsUtil.deleteRecursively(new File(tmp))
+    newParts.foreach(f => moveIfPresent(fs, f.getPath, new Path(root, f.getPath.getName)))
+    parts.foreach(f => fs.delete(f.getPath, false))
+    fs.delete(manifest, false)
+    fs.delete(new Path(tmp), true)
     CompactionStats(parts.length, newParts.length, before)
   }
 
@@ -93,7 +94,7 @@ object SinkMaintenance {
     * call and the returned DataFrame's execution is the same exposure as
     * any listing-based reader; serial maintenance per sink is assumed.) */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    recoverSwap(dir)
+    recoverSwap(spark, dir)
     spark.read.parquet(dir)
   }
 
@@ -101,28 +102,43 @@ object SinkMaintenance {
     * recorded in the manifest (moves of staged files that still exist,
     * deletes of old files that still exist), then clear the manifest and
     * staging dir. Safe to call when no manifest exists (no-op). */
-  private[streaming] def recoverSwap(dir: String): Boolean = {
-    val manifest = Paths.get(dir, SwapManifest)
-    if (!Files.exists(manifest)) return false
-    val lines = Files.readAllLines(manifest)
-    val tmp = lines.stream.filter(_.startsWith("TMP ")).findFirst.get.substring(4)
-    lines.forEach { l =>
+  private[streaming] def recoverSwap(spark: SparkSession, dir: String): Boolean = {
+    val (fs, root) = resolve(spark, dir)
+    val manifest = new Path(root, SwapManifest)
+    if (!fs.exists(manifest)) return false
+    val in = fs.open(manifest)
+    val lines = try new String(in.readAllBytes(), StandardCharsets.UTF_8).split("\n").toSeq
+      finally in.close()
+    val tmp = new Path(lines.find(_.startsWith("TMP ")).get.substring(4))
+    lines.foreach { l =>
       if (l.startsWith("NEW ")) {
         val name = l.substring(4)
-        moveIfPresent(Paths.get(tmp, name), Paths.get(dir, name))
+        moveIfPresent(fs, new Path(tmp, name), new Path(root, name))
       } else if (l.startsWith("OLD ")) {
-        Files.deleteIfExists(Paths.get(dir, l.substring(4))); ()
+        fs.delete(new Path(root, l.substring(4)), false)
       }
     }
-    Files.deleteIfExists(manifest)
-    graft.util.FsUtil.deleteRecursively(new File(tmp))
+    fs.delete(manifest, false)
+    fs.delete(tmp, true)
     true
   }
 
+  /** The sink dir and the Hadoop `FileSystem` of its scheme: `java.io`
+    * would list a sink given as a `file:` URI as empty, and resolve its
+    * manifest under the working directory. */
+  private def resolve(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val p = new Path(dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def partFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+
   /** Move `src` to `dst` if present; a concurrent actor having already
     * performed this exact move (src gone, dst in place) is success, any
-    * other disappearance is a real error. */
-  private def moveIfPresent(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-    try { if (Files.exists(src)) { Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE); () } }
-    catch { case _: java.nio.file.NoSuchFileException if Files.exists(dst) => () }
+    * other failed rename is a real error. */
+  private def moveIfPresent(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (fs.exists(src) && !fs.rename(src, dst))
+      require(!fs.exists(src) && fs.exists(dst), s"could not move $src to $dst")
 }

@@ -1,12 +1,24 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{GraftSession, SparkEntry}
 
-/** Regenerates PLANS.md: the executed (post-AQE) physical plans of the
-  * scale-critical queries at sf0.001, for review without a cluster.
-  * Run: `sbt "runMain graft.tools.DumpPlans"` after changing any query. */
+/** Plan dumps on 4 local cores, each query run once so AQE finalizes;
+  * plan SHAPE is the evidence, so sf0.001 is the default data dir.
+  *
+  * `sbt "runMain graft.tools.DumpPlans"` regenerates PLANS.md: the executed
+  * (post-AQE) physical plans of the scale-critical queries, for review
+  * without a cluster. Run it after changing any query.
+  *
+  * `sbt "runMain graft.tools.DumpPlans <outDir> <suffix> q1,q2,..."` writes
+  * `<outDir>/<q>_<suffix>.txt` per named query instead: the pre-execution
+  * formatted explain (PushedFilters, ReadSchema) and the executed plan
+  * (final join strategies, exchange count) — the before/after evidence
+  * for a touched entry, from SPARK_GRAFT_SF_DIR if set. */
 object DumpPlans {
   private val Picked = Seq(
     "q1_agg"            -> "partial agg below the exchange; pushed filter",
@@ -99,13 +111,24 @@ object DumpPlans {
   /** q70's public query localCheckpoints right after the verify, which cuts
     * the executed plan at the checkpoint scan — dump its candidate stage
     * instead (the join + rebalance shape is what the note describes). */
-  private val PlanOf: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
+  private val PlanOf: Map[String, (SparkSession, String) => DataFrame] =
     Map("q70_fuzzy_match" -> ((s, d) => graft.queries.TextQueries.fuzzyCandidates(s, d)),
         "q88_vocab_drift" -> ((s, d) => graft.queries.TextQueries.vocabDriftJoined(s, d)))
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local("4", "dump-plans")
     val sf = "/root/testdata/sf0.001"
+    args match {
+      case Array() => writePlansMd(spark, sf)
+      case Array(outDir, suffix, names) =>
+        dumpEach(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sf), Paths.get(outDir),
+          suffix, names.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      case _ => sys.error("usage: DumpPlans [<outDir> <suffix> q1,q2,...]")
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sf: String): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — executed physical plans of the scale-critical queries\n\n"
     sb ++= "Generated by `graft.tools.DumpPlans` at sf0.001 (plan SHAPE is what\n"
@@ -119,6 +142,21 @@ object DumpPlans {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${Picked.size} queries)")
-    spark.stop()
+  }
+
+  private def dumpEach(spark: SparkSession, sf: String, outDir: Path,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(outDir)
+    for (name <- names) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val formatted = df.queryExecution.explainString(FormattedMode)
+      df.collect() // finalize AQE so the executed plan is the real one
+      val body = s"== $name ($suffix, ${Paths.get(sf).getFileName}) ==\n\n" +
+        "---- explain(\"formatted\") ----\n" + formatted +
+        "\n---- executed plan (post-AQE) ----\n" +
+        df.queryExecution.executedPlan.toString + "\n"
+      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), body)
+      println(s"[plans] wrote ${name}_$suffix.txt")
+    }
   }
 }

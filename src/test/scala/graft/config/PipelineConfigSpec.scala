@@ -115,4 +115,19 @@ class PipelineConfigSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)))
     assert(dropped.toSeq === Seq(("1", null)))
   }
+
+  test("the engine reads no spark.graft.* dial: only the identity and the scale-guard caps") {
+    // a `spark.graft.*` key that switches between two implementations of
+    // one operator is a dial; deployment settings and safety limits are not
+    import scala.jdk.CollectionConverters._
+    val key = """"spark\.graft\.([\w.]*)""".r // a quoted key literal
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val keys = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => key.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+      .toSet
+      finally files.close()
+    assert(keys === Set("principal", "semdedup.maxCellRows",
+      "imageneardup.maxPairsPerMedia", "linkage.maxPairsPerRecord"))
+  }
 }

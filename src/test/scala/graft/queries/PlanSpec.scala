@@ -959,6 +959,11 @@ class PlanSpec extends SparkSpec {
     assert(!("""windowspecdefinition\(rf#\d+, slope_e6#\d+""".r
         .findFirstIn(p).isDefined),
       "no per-flag global rank over all slopes may remain:\n" + p)
+    // the two-pass pick: only the rank-t bucket's slopes meet a row_number
+    // sort; no aggregate collects every bucket's slopes into an array
+    assert("""row_number\(\) windowspecdefinition\(rf#\d+, bucket#\d+L, slope_e6#\d+L""".r
+        .findFirstIn(p).isDefined && !p.contains("collect_list"),
+      "the median must be picked by row_number within the rank-t bucket:\n" + p)
   }
 
   test("q242/q243: the ser/de passes are join-free scan pipelines") {

@@ -112,20 +112,14 @@ class RecursionEnvelopeSpec extends SparkSpec with BeforeAndAfterEach {
   test("q269 batched execution is batch-size-INVARIANT: K=1 (the native " +
     "one-job-per-level shape), the default, and K>depth agree byte-for-byte") {
     val dir = "/root/testdata/sf0.001"
-    val key = "spark.graft.recursion.batchLevels"
-    def run(): Seq[String] =
-      CoreQueries.q269DeepRecursion(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)).toString).toSeq
-    try {
-      spark.conf.set(key, "1")
-      val k1 = run()
-      spark.conf.unset(key) // default 12
-      val kd = run()
-      spark.conf.set(key, "500")
-      val kAll = run()
-      assert(k1.length === 121, s"chain must emit 121 levels, got ${k1.length}")
-      assert(k1 === kd, "default batch size diverged from K=1")
-      assert(k1 === kAll, "K>depth diverged from K=1")
-    } finally spark.conf.unset(key)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)).toString).toSeq
+    val k1 = rows(CoreQueries.q269DeepRecursion(spark, dir, 1))
+    val kd = rows(CoreQueries.q269DeepRecursion(spark, dir)) // the constant 12
+    val kAll = rows(CoreQueries.q269DeepRecursion(spark, dir, 500))
+    assert(k1.length === 121, s"chain must emit 121 levels, got ${k1.length}")
+    assert(k1 === kd, "default batch size diverged from K=1")
+    assert(k1 === kAll, "K>depth diverged from K=1")
   }
 }

@@ -4,85 +4,95 @@ import graft.SparkSpec
 
 class SinkMaintenanceSpec extends SparkSpec {
 
+  /** The same sink addressed two ways: a plain path, and a `file:` URI
+    * (`dir`, what SinkMaintenance is given) over a local path (`local`,
+    * what the test inspects and stages by hand). */
+  private def sinks(prefix: String): Seq[(String, String)] = {
+    val plain = tmpDir(prefix) + "/sink"
+    val uri = tmpDir(prefix + "-uri") + "/sink"
+    Seq(plain -> plain, ("file://" + uri) -> uri)
+  }
+
+  private def partFiles(dir: String): Array[java.io.File] =
+    new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && f.getName.startsWith("part-")).sortBy(_.getName)
+
   test("compaction merges per-batch small files, preserves rows, and is idempotent") {
     val s = spark
     import s.implicits._
-    val dir = tmpDir("compact") + "/sink"
-    // simulate 20 micro-batch appends -> 20 small files
-    for (b <- 1 to 20)
-      Seq((b.toLong, s"batch-$b")).toDF("id", "tag")
-        .coalesce(1).write.mode("append").parquet(dir)
-    val before = spark.read.parquet(dir)
-    assert(before.inputFiles.length === 20)
-    val data = before.collect().map(_.toString).sorted
+    for ((dir, local) <- sinks("compact")) withClue(s"$dir: ") {
+      // simulate 20 micro-batch appends -> 20 small files
+      for (b <- 1 to 20)
+        Seq((b.toLong, s"batch-$b")).toDF("id", "tag")
+          .coalesce(1).write.mode("append").parquet(dir)
+      val before = spark.read.parquet(dir)
+      assert(before.inputFiles.length === 20)
+      val data = before.collect().map(_.toString).sorted
 
-    val stats = SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
-    assert(stats.filesBefore === 20 && stats.filesAfter === 1 && stats.rows === 20L)
-    val after = spark.read.parquet(dir)
-    assert(after.inputFiles.length === 1)
-    assert(after.collect().map(_.toString).sorted === data)
+      val stats = SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
+      assert(stats.filesBefore === 20 && stats.filesAfter === 1 && stats.rows === 20L)
+      val after = spark.read.parquet(dir)
+      assert(after.inputFiles.length === 1)
+      assert(partFiles(local).length === 1)
+      assert(after.collect().map(_.toString).sorted === data)
 
-    // already compact -> no-op
-    val again = SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
-    assert(again.filesBefore === 1 && again.filesAfter === 1)
+      // already compact -> no-op
+      val again = SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
+      assert(again.filesBefore === 1 && again.filesAfter === 1)
+    }
   }
 
   test("a crash mid-swap never loses the sink; recovery completes the swap") {
     val s = spark
     import s.implicits._
-    val dir = tmpDir("crash") + "/sink"
-    for (b <- 1 to 10)
-      Seq((b.toLong, s"batch-$b")).toDF("id", "tag")
-        .coalesce(1).write.mode("append").parquet(dir)
-    val data = spark.read.parquet(dir).collect().map(_.toString).sorted
+    for ((dir, local) <- sinks("crash")) withClue(s"$dir: ") {
+      for (b <- 1 to 10)
+        Seq((b.toLong, s"batch-$b")).toDF("id", "tag")
+          .coalesce(1).write.mode("append").parquet(dir)
+      val data = spark.read.parquet(dir).collect().map(_.toString).sorted
 
-    // simulate the crash window by hand: stage the compacted output and
-    // write the manifest, as compact() does right before the swap — then
-    // "die" without moving/deleting anything
-    val tmp = dir + ".compact-tmp"
-    spark.read.parquet(dir).repartition(1).write.mode("overwrite").parquet(tmp)
-    val oldParts = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-    val newParts = new java.io.File(tmp).listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, SinkMaintenance.SwapManifest),
-      (Seq(s"TMP $tmp") ++ newParts.map(f => s"NEW ${f.getName}")
-        ++ oldParts.map(f => s"OLD ${f.getName}")).mkString("\n"))
+      // simulate the crash window by hand: stage the compacted output and
+      // write the manifest, as compact() does right before the swap — then
+      // "die" without moving/deleting anything
+      val tmp = dir + ".compact-tmp"
+      val localTmp = local + ".compact-tmp"
+      def stage(files: Int): (Array[java.io.File], Array[java.io.File]) = {
+        spark.read.parquet(dir).repartition(files).write.mode("overwrite").parquet(tmp)
+        val oldParts = partFiles(local)
+        val newParts = partFiles(localTmp)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(local, SinkMaintenance.SwapManifest),
+          (Seq(s"TMP $tmp") ++ newParts.map(f => s"NEW ${f.getName}")
+            ++ oldParts.map(f => s"OLD ${f.getName}")).mkString("\n"))
+        (oldParts, newParts)
+      }
+      stage(1)
 
-    // at no point between manifest write and recovery is the data gone:
-    // the old part files are all still in place
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted === data)
+      // at no point between manifest write and recovery is the data gone:
+      // the old part files are all still in place
+      assert(spark.read.parquet(dir).collect().map(_.toString).sorted === data)
 
-    // next maintenance call finds the manifest and finishes the swap
-    val stats = SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
-    val after = spark.read.parquet(dir)
-    assert(after.inputFiles.length === 1)
-    assert(after.collect().map(_.toString).sorted === data)
-    assert(!new java.io.File(tmp).exists())
-    assert(!new java.io.File(dir, SinkMaintenance.SwapManifest).exists())
+      // next maintenance call finds the manifest and finishes the swap
+      SinkMaintenance.compact(spark, dir, targetFileBytes = 1024L * 1024)
+      val after = spark.read.parquet(dir)
+      assert(after.inputFiles.length === 1)
+      assert(after.collect().map(_.toString).sorted === data)
+      assert(!new java.io.File(localTmp).exists())
+      assert(!new java.io.File(local, SinkMaintenance.SwapManifest).exists())
 
-    // and a crash AFTER some moves/deletes (partial swap) also recovers:
-    // re-stage, apply half the swap by hand, leave the manifest
-    val tmp2 = dir + ".compact-tmp"
-    spark.read.parquet(dir).repartition(2).write.mode("overwrite").parquet(tmp2)
-    val old2 = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-    val new2 = new java.io.File(tmp2).listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, SinkMaintenance.SwapManifest),
-      (Seq(s"TMP $tmp2") ++ new2.map(f => s"NEW ${f.getName}")
-        ++ old2.map(f => s"OLD ${f.getName}")).mkString("\n"))
-    // partial: first new file moved in, first old file deleted, then "crash"
-    java.nio.file.Files.move(new2.head.toPath,
-      java.nio.file.Paths.get(dir, new2.head.getName))
-    old2.head.delete()
+      // and a crash AFTER some moves/deletes (partial swap) also recovers:
+      // re-stage, apply half the swap by hand, leave the manifest
+      val (old2, new2) = stage(2)
+      // partial: first new file moved in, first old file deleted, then "crash"
+      java.nio.file.Files.move(new2.head.toPath,
+        java.nio.file.Paths.get(local, new2.head.getName))
+      old2.head.delete()
 
-    assert(SinkMaintenance.recoverSwap(dir))
-    val recovered = spark.read.parquet(dir)
-    assert(recovered.collect().map(_.toString).sorted === data)
-    assert(recovered.inputFiles.length === 2)
+      assert(SinkMaintenance.recoverSwap(spark, dir))
+      val recovered = spark.read.parquet(dir)
+      assert(recovered.collect().map(_.toString).sorted === data)
+      assert(recovered.inputFiles.length === 2)
+    }
   }
 
   test("a reader landing mid-swap sees exactly-before or exactly-after, never a mix") {
@@ -104,10 +114,8 @@ class SinkMaintenanceSpec extends SparkSpec {
 
       val tmp = dir + ".compact-tmp"
       spark.read.parquet(dir).repartition(2).write.mode("overwrite").parquet(tmp)
-      val oldParts = new java.io.File(dir).listFiles()
-        .filter(f => f.isFile && f.getName.startsWith("part-")).sortBy(_.getName)
-      val newParts = new java.io.File(tmp).listFiles()
-        .filter(f => f.isFile && f.getName.startsWith("part-")).sortBy(_.getName)
+      val oldParts = partFiles(dir)
+      val newParts = partFiles(tmp)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(dir, SinkMaintenance.SwapManifest),
         (Seq(s"TMP $tmp") ++ newParts.map(f => s"NEW ${f.getName}")
