@@ -3,19 +3,33 @@ package graft.merge
 import java.io.IOException
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, EqualNullSafe, EqualTo, Expression, In, InSet, IsNull, Literal, Pmod, Predicate, XxHash64}
+import org.apache.spark.sql.catalyst.util.CollationFactory
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
 import MergeSink.PartCol
 
-/** Committed version `version` of a [[BucketTable]]: each live bucket's
-  * writer version, and the table schema (bucket column excluded). */
-private[merge] final case class Manifest(version: Int, buckets: Map[Long, Int],
+/** A data file of a live bucket: its name in the bucket dir, length and mtime. */
+private[merge] final case class DataFile(name: String, length: Long, mtime: Long)
+
+/** A live bucket: the version that wrote it, and its data files. */
+private[merge] final case class Bucket(writer: Int, files: Seq[DataFile])
+
+/** Committed version `version` of a [[BucketTable]]: its live buckets, and
+  * the table schema (bucket column excluded). */
+private[merge] final case class Manifest(version: Int, buckets: Map[Long, Bucket],
                                          schema: StructType) {
-  /** First line the schema's JSON, then one `bucket,writer` line per bucket. */
-  def text: String = (schema.json +: buckets.toSeq.sorted.map { case (b, v) => s"$b,$v" })
-    .mkString("\n")
+  /** First line the schema's JSON, then one `bucket,writer,length,mtime,name`
+    * line per data file. */
+  def text: String = (schema.json +: (for {
+    (b, k) <- buckets.toSeq.sortBy(_._1); f <- k.files
+  } yield s"$b,${k.writer},${f.length},${f.mtime},${f.name}")).mkString("\n")
 }
 
 /** The one commit protocol of the bucketed tables in `graft.merge`
@@ -25,17 +39,23 @@ private[merge] final case class Manifest(version: Int, buckets: Map[Long, Int],
   *
   *  - Layout: `data/__v=<n>/__part=<p>/` holds bucket `p` as version `n`
   *    wrote it, as one parquet file. `_manifests/v<n>.manifest` is
-  *    committed version `n`: the table schema, then each live bucket's
-  *    writer version.
+  *    committed version `n`: the table schema's JSON on the first line,
+  *    then one `bucket,writer,length,mtime,name` line per data file of a
+  *    live bucket — the bucket, the version that wrote it, and the file's
+  *    length, modification time and name in its bucket dir. A line of any
+  *    other shape fails the read of the manifest.
   *  - [[commit]]: the rewritten buckets are written into a FRESH version dir
   *    `n`, which is never a read source of its own plan, so the rows stream
   *    straight to it and an orphan of a crashed attempt is overwritten by
-  *    the next commit of `n`. Then the manifest is written under a temp
-  *    name and renamed in: that rename is the commit point, and a rename
-  *    that reports failure throws, committing nothing.
-  *  - [[scan]]: ONE parquet scan, with the manifest's schema, over the
-  *    explicit dirs of the wanted live buckets — no listing of the table
-  *    root and no footer merge; a file lacking a column null-fills it.
+  *    the next commit of `n`. That dir's files are listed, then the
+  *    manifest is written under a temp name and renamed in: that rename is
+  *    the commit point, and a rename that reports failure throws,
+  *    committing nothing.
+  *  - [[scan]]: ONE parquet scan, with the manifest's schema, over a
+  *    [[ManifestIndex]] of the wanted live buckets' files — the manifest is
+  *    the file index, so a scan lists no dir and checks no path; a file
+  *    lacking a column null-fills it. A filter on the key column with
+  *    literals (`=`, `<=>`, `IN`) opens only the buckets of those keys.
   *  - History: a table with `keepHistory` off deletes, in the same commit
   *    right after the rename, the bucket dirs the new version superseded,
   *    the version dirs it emptied and the previous manifest. A crash
@@ -47,18 +67,18 @@ private[merge] final case class Manifest(version: Int, buckets: Map[Long, Int],
   * version number, and nothing here locks. A scan planned before a
   * history-less commit may find its files swept; re-read the table.
   */
-private[merge] final class BucketTable(spark: SparkSession, tableDir: String,
-                                       keepHistory: Boolean) {
+private[merge] final class BucketTable(spark: SparkSession, tableDir: String, keyCol: String,
+                                       numBuckets: Int, keepHistory: Boolean) {
   import BucketTable._
 
-  private val root = new Path(tableDir)
+  def fs: FileSystem = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private val root = fs.makeQualified(new Path(tableDir))
   private val manifestDir = new Path(root, "_manifests")
   private val dataRoot = new Path(root, "data")
 
-  def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def manifestPath(v: Int): Path = new Path(manifestDir, f"v$v%05d.manifest")
-  def dataDir(v: Int): Path = new Path(dataRoot, s"$VersionCol=$v")
+  def dataDir(v: Int): Path = new Path(dataRoot, s"__v=$v")
   private def bucketDir(v: Int, b: Long): Path = new Path(dataDir(v), s"$PartCol=$b")
 
   /** Newest committed version; 0 = empty table. */
@@ -68,28 +88,30 @@ private[merge] final class BucketTable(spark: SparkSession, tableDir: String,
       .collect { case ManifestName(v) => v.toInt }.foldLeft(0)(math.max)
 
   def manifest(v: Int): Manifest = {
-    val lines = readText(fs, manifestPath(v)).split('\n')
-    Manifest(v, lines.iterator.drop(1).map { line =>
-      val Array(b, w) = line.split(','); b.toLong -> w.toInt
-    }.toMap, DataType.fromJson(lines.head).asInstanceOf[StructType])
+    val path = manifestPath(v)
+    val lines = readText(fs, path).split('\n')
+    val files = lines.iterator.drop(1).map(line => line.split(",", 5) match {
+      case Array(b, w, len, mtime, name) => (b.toLong, w.toInt, DataFile(name, len.toLong, mtime.toLong))
+      case _ => throw new IOException(s"$path: malformed manifest line '$line'")
+    }).toSeq
+    Manifest(v, files.groupBy(_._1).map { case (b, e) => b -> Bucket(e.head._2, e.map(_._3)) },
+      DataType.fromJson(lines.head).asInstanceOf[StructType])
   }
 
   def current: Option[Manifest] = Some(currentVersion).filter(_ > 0).map(manifest)
 
-  /** The live ones of `buckets` as of `m`, in one scan over their dirs,
-    * with the layout's partition columns. */
-  private def files(m: Manifest, buckets: Iterable[Long]): DataFrame = {
-    val paths = buckets.iterator.flatMap(b => m.buckets.get(b).map(bucketDir(_, b).toString)).toSeq
-    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      m.schema.add(StructField(PartCol, IntegerType)))
-    else spark.read.schema(m.schema).option("basePath", dataRoot.toString).parquet(paths: _*)
+  /** The live ones of `buckets` as of `m`, bucket column included: one
+    * scan over the files `m` lists. */
+  def scan(m: Manifest, buckets: Iterable[Long]): DataFrame = {
+    val parts = buckets.iterator.flatMap(b => m.buckets.get(b).map(k => b -> k.files.map(f =>
+      new FileStatus(f.length, false, 0, 0, f.mtime, new Path(bucketDir(k.writer, b), f.name))))).toSeq
+    val index = new ManifestIndex(root, parts, keyCol, numBuckets)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, m.schema,
+      None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** The live ones of `buckets` as of `m`, bucket column included. */
-  def scan(m: Manifest, buckets: Iterable[Long]): DataFrame = files(m, buckets).drop(VersionCol)
-
   /** The whole table as of `m`, without the bucket column. */
-  def read(m: Manifest): DataFrame = files(m, m.buckets.keys).drop(VersionCol, PartCol)
+  def read(m: Manifest): DataFrame = scan(m, m.buckets.keys).drop(PartCol)
 
   def read(): DataFrame =
     read(current.getOrElse(throw new IllegalArgumentException(s"no table committed at $tableDir")))
@@ -103,27 +125,92 @@ private[merge] final class BucketTable(spark: SparkSession, tableDir: String,
     rows.write.partitionBy(PartCol).mode(SaveMode.Overwrite).parquet(dataDir(next).toString)
     val fs = this.fs
     val replaced = rewritten.toSet
-    val written = fs.listStatus(dataDir(next)).iterator.map(_.getPath.getName)
-      .collect { case BucketName(b) => b.toLong }.filter(replaced).map(_ -> next)
-    val m = Manifest(next, prev.fold(Map.empty[Long, Int])(_.buckets) -- replaced ++ written,
+    val written = fs.listStatus(dataDir(next)).iterator.map(s => (s.getPath, s.getPath.getName))
+      .collect { case (dir, BucketName(b)) if replaced(b.toLong) =>
+        b.toLong -> Bucket(next, fs.listStatus(dir).toSeq.map(s => (s, s.getPath.getName))
+          .collect { case (s, name) if !name.startsWith("_") && !name.startsWith(".") =>
+            DataFile(name, s.getLen, s.getModificationTime)
+          })
+      }
+    val m = Manifest(next, prev.fold(Map.empty[Long, Bucket])(_.buckets) -- replaced ++ written,
       nullable(StructType(rows.schema.filterNot(_.name == PartCol))).asInstanceOf[StructType])
     val tmp = new Path(manifestDir, f".v$next%05d.tmp")
     writeText(fs, tmp, m.text)
     rename(fs, tmp, manifestPath(next))
     if (!keepHistory) prev.foreach { p =>
-      val live = m.buckets.values.toSet
-      for ((b, v) <- p.buckets if live(v) && !m.buckets.get(b).contains(v))
-        fs.delete(bucketDir(v, b), true)
-      for (v <- p.buckets.values.toSet + next -- live) fs.delete(dataDir(v), true)
+      val live = m.buckets.values.map(_.writer).toSet
+      for ((b, k) <- p.buckets if live(k.writer) && !m.buckets.get(b).exists(_.writer == k.writer))
+        fs.delete(bucketDir(k.writer, b), true)
+      for (v <- p.buckets.values.map(_.writer).toSet + next -- live) fs.delete(dataDir(v), true)
       fs.delete(manifestPath(p.version), false)
     }
     m
   }
 }
 
+/** A Spark [[FileIndex]] over the data files a manifest lists: one
+  * [[PartitionDirectory]] per live bucket in `parts`, with the bucket
+  * column as its one partition column. `listFiles` applies the partition
+  * filters itself (`FileSourceStrategy` does not re-apply them), and keeps
+  * only the buckets of the literals that `key = lit`, `key <=> lit`,
+  * `key IN (...)`, `InSet` and `key IS NULL` (what the optimizer makes of
+  * `key <=> NULL`) data filters allow, each bucket computed as
+  * `withPart` computes it. Only keys whose equality is bitwise prune: a
+  * float key (`0.0 = -0.0`, NaNs equal) or a collated string key does not.
+  */
+private[merge] final class ManifestIndex(root: Path, parts: Seq[(Long, Seq[FileStatus])],
+                                         keyCol: String, numBuckets: Int) extends FileIndex {
+  override val partitionSchema: StructType = StructType(Seq(StructField(PartCol, LongType, false)))
+  override def rootPaths: Seq[Path] = Seq(root)
+  override def inputFiles: Array[String] = parts.flatMap(_._2).map(_.getPath.toString).toArray
+  override def sizeInBytes: Long = parts.flatMap(_._2).map(_.getLen).sum
+  override def refresh(): Unit = ()
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val byPart = Predicate.createInterpreted(partitionFilters.reduceOption(And)
+      .getOrElse(Literal.TrueLiteral).transform { case _: AttributeReference =>
+        BoundReference(0, LongType, nullable = false)
+      })
+    val keyed = dataFilters.flatMap(keyLiterals).map(_.map(bucketOf).toSet)
+    parts.collect { case (b, files) if keyed.forall(_(b)) && byPart.eval(InternalRow(b)) =>
+      PartitionDirectory(InternalRow(b), files.toArray)
+    }
+  }
+
+  /** The key values `f` allows, when `f` is a key lookup by literals. */
+  private def keyLiterals(f: Expression): Option[Seq[Literal]] = f match {
+    case EqualTo(a, l: Literal) if isKey(a, l.dataType) => Some(Seq(l))
+    case EqualTo(l: Literal, a) if isKey(a, l.dataType) => Some(Seq(l))
+    case EqualNullSafe(a, l: Literal) if isKey(a, l.dataType) => Some(Seq(l))
+    case EqualNullSafe(l: Literal, a) if isKey(a, l.dataType) => Some(Seq(l))
+    case In(a, list) if isKey(a, a.dataType) &&
+        list.forall { case l: Literal => l.dataType == a.dataType; case _ => false } =>
+      Some(list.map(_.asInstanceOf[Literal]))
+    case InSet(a, set) if isKey(a, a.dataType) => Some(set.toSeq.map(Literal(_, a.dataType)))
+    case IsNull(a) if isKey(a, a.dataType) => Some(Seq(Literal(null, a.dataType)))
+    case _ => None
+  }
+
+  private def isKey(e: Expression, litType: DataType): Boolean = e match {
+    case a: AttributeReference => SQLConf.get.resolver(a.name, keyCol) &&
+      a.dataType == litType && bitwiseEquality(a.dataType)
+    case _ => false
+  }
+
+  private def bitwiseEquality(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType |
+         TimestampNTZType | BinaryType => true
+    case s: StringType => s.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID
+    case _ => false
+  }
+
+  /** `pmod(xxhash64(key), numBuckets)`, the bucket `withPart` gives `l`. */
+  private def bucketOf(l: Literal): Long =
+    Pmod(new XxHash64(Seq(l)), Literal(numBuckets.toLong)).eval().asInstanceOf[Long]
+}
+
 private[merge] object BucketTable {
-  /** The version column of the data layout, dropped by every scan. */
-  val VersionCol = "__v"
   private val ManifestName = "^v(\\d+)\\.manifest$".r
   private val BucketName = s"^$PartCol=(\\d+)$$".r
 

@@ -38,7 +38,7 @@ final class IncrementalAgg(
     numBuckets: Int = 64) {
   import MergeSink.{PartCol, byBucket, touchedBuckets, withPart}
 
-  private val table = new BucketTable(spark, tableDir, keepHistory = false)
+  private val table = new BucketTable(spark, tableDir, keyCol, numBuckets, keepHistory = false)
 
   /** Fold one batch of per-key PARTIALS (columns: key + every combiner
     * column) into the view. */

@@ -1,6 +1,6 @@
 package graft.merge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -30,7 +30,7 @@ final class MergeSink(
     tombstoneCol: Option[String] = None) {
   import MergeSink._
 
-  private val table = new BucketTable(spark, tableDir, keepHistory = false)
+  private val table = new BucketTable(spark, tableDir, keyCol, numBuckets, keepHistory = false)
 
   /** Merge one batch of change rows into the table: latest row per key wins,
     * ordering by `orderCols` (e.g. change timestamp, then a unique change id)
@@ -44,7 +44,8 @@ final class MergeSink(
   def merge(batch: DataFrame): Unit = {
     // the batch has two consumers (the touched-bucket probe and the merge
     // union) — persist so an expensive batch source (a parsed JSON
-    // micro-batch, a computed change set) is evaluated once, not twice
+    // micro-batch, a computed change set) is evaluated once, not twice, and
+    // a streaming batch's input rows are counted once
     val newPart = withPart(batch, keyCol, numBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -115,14 +116,20 @@ object MergeSink {
   /** The bucket column of every merge-layer table. */
   private[merge] val PartCol = "__part"
 
-  /** `df` with its key's bucket, `pmod(xxhash64(key), numBuckets)`. */
+  /** `df` with its key's bucket, `pmod(xxhash64(key), numBuckets)`;
+    * `ManifestIndex` computes the same for a key literal. */
   private[merge] def withPart(df: DataFrame, keyCol: String, numBuckets: Int): DataFrame =
     df.withColumn(PartCol, pmod(xxhash64(col(keyCol)), lit(numBuckets)))
 
   /** The buckets `df` (which carries [[PartCol]]) touches — bounded by the
-    * bucket count, so driver-safe. */
+    * bucket count, so driver-safe. One job without a shuffle: each
+    * partition's distinct buckets, unioned on the driver. Typed, so the job
+    * runs inside an SQL execution; over a persisted `df` it is also the job
+    * that fills the cache, as no exchange puts a cache stage before it. */
   private[merge] def touchedBuckets(df: DataFrame): Seq[Long] =
-    df.select(PartCol).distinct().collect().map(_.getLong(0)).toSeq
+    df.select(PartCol).as(Encoders.scalaLong)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaLong)
+      .collect().distinct.toSeq
 
   /** `df` (which carries [[PartCol]]) with one task per bucket:
     * hash-partitioned on the bucket column into at most as many partitions

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Every merge writes its rewritten buckets into a fresh version
   *    directory, never touching earlier versions' files, and commits by
   *    one manifest rename; `merge` returns the new version number.
-  *  - `read(v)` scans, in one scan, the bucket dirs version `v`'s manifest
-  *    names — no file listing of untouched history, so a time-travel read
+  *  - `read(v)` scans, in one scan, the files version `v`'s manifest
+  *    lists — no file listing of untouched history, so a time-travel read
   *    costs the same as a current read.
   *  - Crash safety is the commit's: a crash before the manifest rename
   *    leaves an orphan version dir that the next merge of the same version
@@ -32,7 +32,7 @@ final class VersionedSink(
     numBuckets: Int = 64) {
   import MergeSink.{byBucket, latestPerKey, touchedBuckets, withPart}
 
-  private val table = new BucketTable(spark, tableDir, keepHistory = true)
+  private val table = new BucketTable(spark, tableDir, keyCol, numBuckets, keepHistory = true)
 
   /** Newest committed version; 0 = empty table. */
   def currentVersion: Int = table.currentVersion
@@ -76,7 +76,7 @@ final class VersionedSink(
   def vacuum(retain: Int): Seq[Int] = {
     val cur = currentVersion
     val keepFrom = math.max(1, cur - retain + 1)
-    val live = (keepFrom to cur).flatMap(v => manifest(v).buckets.values).toSet
+    val live = (keepFrom to cur).flatMap(v => manifest(v).buckets.values.map(_.writer)).toSet
     val dropped = (1 until keepFrom).filterNot(live)
     val fs = table.fs
     for (v <- dropped) fs.delete(table.dataDir(v), true)

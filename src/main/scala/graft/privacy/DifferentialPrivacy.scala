@@ -69,7 +69,9 @@ object DifferentialPrivacy {
       * same dir (cross-process via an exclusive file lock around each
       * read-check-append), and is stamped with the budget total at
       * creation — reopening with a DIFFERENT total fails closed rather
-      * than silently re-basing the guarantee. */
+      * than silently re-basing the guarantee. `dir` is a local path or a
+      * `file:` URI; any other scheme throws `IllegalArgumentException`, as
+      * the lock is a local file lock. */
     def durable(dir: String, totalEpsilon: Double): DpBudget =
       new DurableDpBudget(dir, totalEpsilon)
   }
@@ -105,8 +107,14 @@ object DifferentialPrivacy {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.{Files, Paths, StandardOpenOption => O}
 
+    // the journal needs a local file for its lock: a plain path or a
+    // `file:` URI, never a remote scheme
     private val path = {
-      val d = Paths.get(dir)
+      val uri = new org.apache.hadoop.fs.Path(dir).toUri
+      if (uri.getScheme != null && uri.getScheme != "file")
+        throw new IllegalArgumentException(s"privacy-budget ledger dir '$dir' has scheme " +
+          s"'${uri.getScheme}': its file lock needs a local path or a file: URI")
+      val d = Paths.get(uri.getPath)
       Files.createDirectories(d)
       d.resolve("epsilon-ledger")
     }

@@ -1,10 +1,12 @@
 package graft.schema
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One immutable revision of a named schema. The revision id is the first 8
@@ -106,12 +108,10 @@ final class SchemaRegistry {
     * format) — the durable store the reference keeps in its managed
     * registry. Control-plane-sized: one small file per revision. */
   def persist(dir: String): Unit = synchronized {
-    revisions.foreach { case (name, revs) =>
-      val d = Paths.get(dir, name)
-      Files.createDirectories(d)
-      revs.zipWithIndex.foreach { case (rev, i) =>
-        Files.writeString(d.resolve(f"$i%05d-${rev.revisionId}.json"), rev.schema.json)
-      }
+    val (fs, root) = SchemaRegistry.fsOf(dir)
+    for ((name, revs) <- revisions; (rev, i) <- revs.zipWithIndex) {
+      val out = fs.create(new Path(new Path(root, name), f"$i%05d-${rev.revisionId}.json"), true)
+      try out.write(rev.schema.json.getBytes(UTF_8)) finally out.close()
     }
   }
 }
@@ -164,18 +164,25 @@ object SchemaRegistry {
   /** Rebuild a registry from [[SchemaRegistry.persist]] output. */
   def load(dir: String): SchemaRegistry = {
     val reg = new SchemaRegistry
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return reg
-    val names = Files.list(root).iterator().asScala.toSeq
-      .filter(Files.isDirectory(_)).sortBy(_.getFileName.toString)
-    for (nameDir <- names) {
-      val files: Seq[Path] = Files.list(nameDir).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.endsWith(".json"))
-        .sortBy(_.getFileName.toString) // seq prefix restores revision order
-      for (f <- files)
-        reg.register(nameDir.getFileName.toString,
-          DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+    val (fs, root) = fsOf(dir)
+    if (!fs.exists(root)) return reg
+    def sorted(p: Path) = fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
+    for (nameDir <- sorted(root) if nameDir.isDirectory;
+         f <- sorted(nameDir.getPath) // seq prefix restores revision order
+         if f.getPath.getName.endsWith(".json")) {
+      val in = fs.open(f.getPath)
+      val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      reg.register(nameDir.getPath.getName, DataType.fromJson(json).asInstanceOf[StructType])
     }
     reg
+  }
+
+  /** `dir` and the Hadoop `FileSystem` of its scheme — the active session's
+    * filesystems when there is one — so a registry given as a URI lands
+    * there, not under a local path named after the URI. */
+  private def fsOf(dir: String): (FileSystem, Path) = {
+    val p = new Path(dir)
+    (p.getFileSystem(SparkSession.getActiveSession.map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration())), p)
   }
 }

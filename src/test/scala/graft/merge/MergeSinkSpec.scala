@@ -1,13 +1,47 @@
 package graft.merge
 
+import java.io.IOException
+import java.net.URI
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+
+/** The local filesystem under its own `countdirs` scheme, recording every
+  * listing and existence check of a table's version or bucket dir. */
+class DirCheckCountingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("countdirs:///")
+  override def getScheme: String = "countdirs"
+  override def listStatus(p: Path): Array[FileStatus] = { DirCheckCountingFs.note(p); super.listStatus(p) }
+  override def getFileStatus(p: Path): FileStatus = { DirCheckCountingFs.note(p); super.getFileStatus(p) }
+  override def exists(p: Path): Boolean = { DirCheckCountingFs.note(p); super.exists(p) }
+}
+
+object DirCheckCountingFs {
+  val calls = new ConcurrentLinkedQueue[String]()
+  def note(p: Path): Unit =
+    if (p.getName.startsWith("__v=") || p.getName.startsWith("__part=")) calls.add(p.toString)
+}
+
+/** The file scans of an executed plan, adaptive or not. */
+object FileScans extends AdaptiveSparkPlanHelper {
+  /** Collect `df`, then sum its scans' files-read metric. */
+  def filesRead(df: DataFrame): (Set[Row], Long) = {
+    val rows = df.collect().toSet
+    (rows, collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+      .map(_.metrics("numFiles").value).sum)
+  }
+}
 
 /** O25/O26: latest-wins merge semantics, idempotence (at-least-once replay
   * tolerance), and backfill ∪ stream convergence. */
@@ -300,5 +334,95 @@ class MergeSinkSpec extends SparkSpec {
           Option(r.getAs[String]("tier")))).toSeq
     })
     assert(rows === Seq((1L, "a1", None), (2L, "b2", Some("gold"))))
+  }
+
+  test("a merge into a 64-bucket table runs 3 jobs, all inside SQL executions") {
+    val sink = new MergeSink(spark, tmpDir("merge-3jobs") + "/t", "id", Seq("ts"))
+    sink.merge(changes((1L to 2000L).map(i => (i, s"n$i", 1L)): _*))
+    val jobs = jobsDuring(sink.merge(changes((1L to 300L).map(i => (i * 6, s"m$i", 2L)): _*)))
+    assert(jobs.length === 3, s"jobs: $jobs")
+    assert(jobs.forall(_._2), s"job outside an SQL execution: $jobs")
+  }
+
+  test("a read lists no version or bucket dir and checks no path") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countdirs.impl",
+      classOf[DirCheckCountingFs].getName)
+    val sink = new MergeSink(spark, "countdirs://" + tmpDir("merge-nolist") + "/t", "id", Seq("ts"))
+    sink.merge(changes((1L to 500L).map(i => (i, s"n$i", 1L)): _*))
+    DirCheckCountingFs.calls.clear()
+    assert(sink.read().collect().length === 500)
+    assert(DirCheckCountingFs.calls.isEmpty, s"dir calls: ${DirCheckCountingFs.calls}")
+  }
+
+  /** For each filter: the key lookup through `read()` opens as many files
+    * as `buckets(filter)`, and returns the rows, non-empty, that a scan of
+    * the table's raw storage returns. */
+  private def assertLookups(dir: String, sink: MergeSink, cols: Seq[String],
+                            lookups: Seq[(Column, Long)]): Unit =
+    for ((f, buckets) <- lookups) {
+      val (rows, files) = FileScans.filesRead(sink.read().filter(f).select(cols.map(col): _*))
+      val want = spark.read.parquet(dir).filter(f).select(cols.map(col): _*).collect().toSet
+      assert(rows.nonEmpty && rows === want, s"$f")
+      assert(files === buckets, s"$f: files read")
+    }
+
+  /** The distinct buckets of `keys` in a table of `n` buckets. */
+  private def bucketsOf(keys: DataFrame, n: Int): Long =
+    keys.select(pmod(xxhash64(col(keys.columns.head)), lit(n))).distinct().count()
+
+  test("a key lookup reads only its keys' buckets and returns what an unpruned scan returns") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("merge-prune") + "/t"
+    val sink = new MergeSink(spark, dir, "id", Seq("ts"))
+    sink.merge(((1L to 2000L).map(i => (Option(i), s"n$i", 1L)) :+ ((None, "no-key", 1L)))
+      .toDF("id", "name", "ts"))
+    assert(sink.read().inputFiles.length === 64)
+    val many = (1L to 16L).map(_ * 97)
+    def buckets(keys: Seq[Option[Long]]) = bucketsOf(keys.toDF("id"), 64)
+    assertLookups(dir, sink, Seq("id", "name", "ts"), Seq(
+      ($"id" === 7L) -> buckets(Seq(Some(7L))),
+      ($"id" <=> 42L) -> buckets(Seq(Some(42L))),
+      $"id".isin(3L, 500L, 1999L) -> buckets(Seq(3L, 500L, 1999L).map(Some(_))),
+      $"id".isin(many: _*) -> buckets(many.map(Some(_))),
+      ($"id" <=> lit(null)) -> buckets(Seq(None))))
+    // a conjunction prunes to the buckets both sides allow
+    val (rows, files) = FileScans.filesRead(sink.read()
+      .filter($"id".isin(many: _*) && $"id".isin(many.head, 5L)).select("name"))
+    assert(rows === Set(Row(s"n${many.head}")))
+    assert(files === 1L)
+  }
+
+  test("double and string keys still find every match") {
+    val s = spark
+    import s.implicits._
+    val ddir = tmpDir("merge-dkey") + "/t"
+    val dsink = new MergeSink(spark, ddir, "k", Seq("ts"), numBuckets = 8)
+    dsink.merge(Seq((-0.0, "neg", 2L), (0.0, "pos", 1L), (1.5, "x", 1L), (2.5, "y", 1L),
+      (7.0, "z", 1L)).toDF("k", "name", "ts"))
+    val all = dsink.read().inputFiles.length.toLong
+    assertLookups(ddir, dsink, Seq("k", "name"), Seq(
+      ($"k" === 0.0) -> all, ($"k" === -0.0) -> all, $"k".isin(-0.0, 1.5) -> all,
+      ($"k" <=> 0.0) -> all))
+    val sdir = tmpDir("merge-skey") + "/t"
+    val ssink = new MergeSink(spark, sdir, "k", Seq("ts"), numBuckets = 16)
+    ssink.merge((1 to 200).map(i => (s"k$i", i.toLong)).toDF("k", "ts"))
+    val some = (1 to 12).map(i => s"k${i * 13}")
+    assertLookups(sdir, ssink, Seq("k", "ts"), Seq(
+      ($"k" === "k7") -> bucketsOf(Seq("k7").toDF("k"), 16),
+      $"k".isin(some: _*) -> bucketsOf(some.toDF("k"), 16)))
+  }
+
+  test("a manifest line of another shape fails the read") {
+    val dir = tmpDir("merge-oldmanifest") + "/t"
+    val sink = new MergeSink(spark, dir, "id", Seq("ts"), numBuckets = 4)
+    sink.merge(changes((1L, "a", 1L)))
+    val manifest = Paths.get(dir, "_manifests", "v00001.manifest")
+    val lines = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8).split('\n')
+    Files.write(manifest, (lines.head +: lines.tail.map(_.split(',').take(2).mkString(",")))
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.deleteIfExists(Paths.get(dir, "_manifests", ".v00001.manifest.crc"))
+    val e = intercept[IOException](sink.read())
+    assert(e.getMessage.contains("malformed manifest line"), e.getMessage)
   }
 }

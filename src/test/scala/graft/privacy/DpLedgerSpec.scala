@@ -110,4 +110,16 @@ class DpLedgerSpec extends AnyFunSuite {
     assert(lines.get(1) === "spent=0.25")
     assert(lines.get(2) === "spent=0.75")
   }
+
+  test("a ledger given as a file: URI journals at that local path") {
+    val dir = freshDir()
+    DpBudget.durable(Paths.get(dir).toUri.toString, 2.0).charge(0.5)
+    assert(Files.exists(Paths.get(dir, "epsilon-ledger")))
+    assert(math.abs(DpBudget.durable(dir, 2.0).spentEpsilon - 0.5) < 1e-12)
+  }
+
+  test("a ledger dir of a non-local scheme is rejected") {
+    val e = intercept[IllegalArgumentException](DpBudget.durable("hdfs://namenode/ledger", 2.0))
+    assert(e.getMessage.contains("'hdfs'"), e.getMessage)
+  }
 }

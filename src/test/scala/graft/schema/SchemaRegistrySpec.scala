@@ -45,4 +45,16 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(loaded.history("topic").map(_.revisionId) === r.history("topic").map(_.revisionId))
     assert(loaded.history("topic").size === 3)
   }
+
+  test("a registry persisted to a file: URI lands at that path and loads back from it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-registry-uri")
+    val r = new SchemaRegistry
+    r.register("topic", v1)
+    r.register("topic", v2)
+    r.persist(dir.toUri.toString)
+    assert(java.nio.file.Files.isDirectory(dir.resolve("topic")))
+    for (d <- Seq(dir.toUri.toString, dir.toString))
+      assert(SchemaRegistry.load(d).history("topic").map(_.revisionId) ===
+        r.history("topic").map(_.revisionId), d)
+  }
 }
